@@ -111,7 +111,7 @@ object Audits {
     "vs_nng_delete.patch_candidates" -> Audit((s, d) => {
       val qv = graft.util.Persist.stage(
         ops.VectorSearch.int8Grid(s, d), eager = false)
-      val (refined, _) = ops.NnGraph.buildShared(qv, s"$d#full")
+      val (refined, _) = ops.NnGraph.buildShared(qv, d, "full")
       ops.VectorSearch.nngPatchCandidates(refined).count()
     }, vecRows, 11.0))
 }

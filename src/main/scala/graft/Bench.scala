@@ -230,21 +230,20 @@ object Bench {
     }.mkString("{", ",", "}")
     val familyAlarmJson = familyAudit.filter(_._5).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
-    // The sweep leaves every memoized localCheckpoint pinned (planner /
-    // NNG shared frames) — state the serving blocks never read: every
-    // serve runs from STORED catalog tables and stages what it needs
-    // fresh. Drop the pins so the serving measurement reflects a
-    // serving node's memory, not the 185-key sweep's cache pressure.
-    // r18 advice: the memo MAPS must be cleared in the same step —
-    // localCheckpoint truncates lineage, so an unpersisted frame still
-    // held by a memo is permanently unrecomputable; a later caller in
-    // this SparkContext would be served a dead frame. Evict through
-    // the owners' release paths first, then flush whatever remains.
-    graft.ops.VectorSearch.evictFrameMemos()
-    graft.ops.NnGraph.evictMemos()
-    graft.ops.Dedup.evictMemos()
-    graft.ops.TextAnalysis.evictMemos()
-    graft.streaming.Streaming.evictSearchIvfMemo()
+    // The sweep leaves every staged artifact pinned (planner / NNG
+    // shared frames) — state the serving blocks never read: every serve
+    // runs from STORED catalog tables and stages what it needs fresh.
+    // Drop the pins so the serving measurement reflects a serving node's
+    // memory, not the 185-key sweep's cache pressure. The registry must
+    // let go in the same step (r18 advice): localCheckpoint truncates
+    // lineage, so an unpersisted frame it still served would be
+    // permanently unrecomputable. Its per-artifact build/hit accounting
+    // is read first, so the sweep's construction cost is charged to the
+    // artifacts that paid it.
+    val artifactsJson = graft.util.Staged.stats.map { case (name, builds, s, hits) =>
+      jstr(name) + s""":{"builds":$builds,"build_s":${graft.util.Jnum.f3(s)},"hits":$hits}"""
+    }.mkString("{", ",", "}")
+    graft.util.Staged.evictAll()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     // Serving-rate block (r14 verdict #7): the streaming keys are timed
@@ -332,7 +331,7 @@ object Bench {
     // HEAD stamp (r14 verdict #6): the freeze gate asserts no product
     // source changed between this SHA and the HEAD under test.
     val gitSha = graft.util.GitInfo.stampSha().getOrElse("unknown")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","git_sha":${jstr(gitSha)},"queries":$qs,"medians":$medJson,"first_rep":$firstJson,"reps":$repJson,"audits":$auditJson,"audit_alarms":$alarmJson,"audit_failures":$auditFailJson,"family_audit":$familyJson,"family_alarms":$familyAlarmJson,"steady_ref":${jstr(steadyPath)},"serving":$servingJson,"serving_lsh":$servingLshJson,"serving_pruned":$servingPrunedJson,"serving_lsh_pruned":$servingLshPrunedJson,"serving_lsh_warm":$servingLshWarmJson,"pipeline_e2e_stages":$stageJson,"calibration":$calJson,"sf":${jstr(sfDir)}}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","git_sha":${jstr(gitSha)},"queries":$qs,"medians":$medJson,"first_rep":$firstJson,"reps":$repJson,"audits":$auditJson,"audit_alarms":$alarmJson,"audit_failures":$auditFailJson,"family_audit":$familyJson,"family_alarms":$familyAlarmJson,"steady_ref":${jstr(steadyPath)},"serving":$servingJson,"serving_lsh":$servingLshJson,"serving_pruned":$servingPrunedJson,"serving_lsh_pruned":$servingLshPrunedJson,"serving_lsh_warm":$servingLshWarmJson,"pipeline_e2e_stages":$stageJson,"artifacts":$artifactsJson,"calibration":$calJson,"sf":${jstr(sfDir)}}"""
     // Full detail (every query + every rep) goes to a known file path —
     // a write failure must not fail the bench run.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")

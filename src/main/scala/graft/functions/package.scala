@@ -133,7 +133,8 @@ package object functions {
     "misra_gries" -> (es => MisraGries(es(0), litK("misra_gries", es))))
 
   /** Register all graft kernels as session SQL functions (usable in
-    * `expr(...)`, SQL text, and higher-order-function lambdas). */
+    * `expr(...)`, SQL text, and higher-order-function lambdas).
+    * Idempotent: names the session already holds are skipped. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graftbridge.Bridge.registerFunction
     kernelBuilders.foreach { case (name, b) => registerFunction(spark, name, b) }

@@ -177,20 +177,10 @@ object Dedup {
   // content-identical to a fresh build (sibling hashes unchanged), and
   // in a deployment the verified pair graph is the curation run's
   // shared staging artifact, computed once per corpus. Frames are
-  // staged; [[evictMemos]] releases them with the other frame memos
-  // before the bench's serving blocks.
-  private val pairFrameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  // staged through [[graft.util.Staged]] like every shared artifact.
   private def pairFrameShared(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    pairFrameMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    pairFrameMemo.computeIfAbsent((spark, dir, tag), _ => build)
-  }
-  private[graft] def evictMemos(): Unit = {
-    import scala.jdk.CollectionConverters._
-    pairFrameMemo.values.asScala.foreach(graft.util.Persist.release)
-    pairFrameMemo.clear()
-  }
+      build: => DataFrame): DataFrame =
+    graft.util.Staged.get(spark, s"dedup.$tag", dir)(build)
 
   /** Connected components via the alternating large-star/small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and

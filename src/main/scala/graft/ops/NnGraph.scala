@@ -76,7 +76,7 @@ object NnGraph {
     * build needed 4 rounds at S=32 (120 s vs 22 s build wall at sf1)
     * for 0.845 (r11 numbers under the legacy id-prefix entry rule; the
     * r12 hash-coin entry set grades the same build at 0.877, and six
-    * entry sets span 0.846-0.877 on ONE graph — graft.tools.EntrySens —
+    * entry sets span 0.846-0.877 on ONE graph — EntrySens, commit dce4359 —
     * so ±0.016 of any single sf1 recall is entry lottery, not build
     * quality). Rounds×S trades measured flat here (3×24 → 0.867,
     * 2×32 → 0.859 — same total pair volume n·S²·R/2) — take the fewer
@@ -256,86 +256,37 @@ object NnGraph {
     .join(quant.select(col("vec_id").as("dst"), col("qd").as("bq")), "dst")
     .select(col("src"), col("dst"), intD2(col("aq"), col("bq")).as("d2"))
 
-  // Built-index memo for the lifecycle queries. vs_nng_search,
-  // vs_nng_upsert, vs_nng_delete (and vs_nng_filtered) each start from
-  // "the stored index artifact" — in a deployment ONE graph built once
-  // and served to every consumer; here each query re-derived it, so a
-  // sweep paid ~3 near-identical builds (~30 s at sf0.1, ~95 s at sf1).
-  // Memoized per (sessionUUID, corpus tag): the build is deterministic
-  // (NngSpec pins identical output across calls), so every consumer
-  // reads the same frames a fresh build would produce — oracle hashes
-  // are unaffected, only repeated construction work is skipped. The
-  // values are staged (checkpointed) DataFrames, which strongly
-  // reference their SparkSession — so on every access entries from OTHER
-  // sessions are dropped (at most one session's graphs are ever pinned;
-  // in the bench/verify/test JVMs that session lives for the JVM anyway,
-  // and a graph is n·K edge rows — index-sized, not corpus-sized).
-  private final val BuiltMemoMax = 32
-  private val builtMemo = new java.util.LinkedHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      (Long, DataFrame, DataFrame, java.util.concurrent.atomic.AtomicBoolean)](
-      16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (org.apache.spark.sql.SparkSession, String),
-        (Long, DataFrame, DataFrame, java.util.concurrent.atomic.AtomicBoolean)]): Boolean =
-      size() > BuiltMemoMax
-  }
-
-  /** Release every memoized build's staged frames and clear the memo
-    * (r18 advice — see [[graft.ops.VectorSearch.evictFrameMemos]]):
-    * after a blanket unpersist the localCheckpoint-backed (refined,
-    * init) frames are unrecomputable, so the pins must go with the
-    * blocks. The next [[buildShared]] call rebuilds from its input. */
-  private[graft] def evictMemos(): Unit = builtMemo.synchronized {
-    import scala.jdk.CollectionConverters._
-    builtMemo.values.asScala.foreach { case (_, refined, init, _) =>
-      graft.util.Persist.release(refined)
-      graft.util.Persist.release(init)
-    }
-    builtMemo.clear()
-  }
-
-  /** [[build]] with plan-level reuse: the first caller per (session,
-    * `tag`) builds; subsequent callers get the SAME staged (refined,
-    * init) frames — the "query the stored index" shape a deployment
-    * has, instead of every lifecycle query re-constructing the index.
-    * `tag` must uniquely name the corpus slice (dir + filter).
+  /** [[build]] with plan-level reuse for the lifecycle queries:
+    * vs_nng_search, vs_nng_upsert, vs_nng_delete (and vs_nng_filtered)
+    * each start from "the stored index artifact" — in a deployment ONE
+    * graph built once and served to every consumer; rebuilt per query,
+    * a sweep paid ~3 near-identical builds (~30 s at sf0.1, ~95 s at
+    * sf1). The first caller per (session, `dir`, `slice`) builds
+    * through [[graft.util.Staged]]; later callers get the SAME staged
+    * (refined, init) frames. The build is deterministic (NngSpec pins
+    * identical output across calls), so oracle hashes are unaffected.
+    * `slice` must uniquely name the corpus slice of `dir` (filter).
     *
-    * r12 advice hardening: eviction drops only entries whose session
-    * has STOPPED (the old `ne sess` rule let two live sessions in one
-    * JVM thrash each other's caches), and a caller passing a different
-    * slice under an existing tag fails loudly instead of silently
-    * searching the wrong index: the corpus ROW COUNT is re-checked
-    * against the count recorded at build time. r13 advice hardening:
-    * the tripwire count runs on the FIRST REUSE only (the build path
-    * counts once to record n0 — it never re-counts what it just built,
-    * and later hits skip the job entirely: on an unstaged input every
-    * access was a full corpus scan), and the memo is a bounded LRU
-    * ([[BuiltMemoMax]] entries — evicting drops only the reuse pin;
-    * holders of the staged frames are unaffected). The count catches
-    * slice mixups, not adversarial same-cardinality swaps — the tag
-    * convention remains the contract, the count is the tripwire. */
-  def buildShared(quant: DataFrame, tag: String): (DataFrame, DataFrame) = {
-    val sess = quant.sparkSession
-    val (entry, fresh) = builtMemo.synchronized {
-      builtMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-      val key = (sess, tag)
-      val existing = builtMemo.get(key)
-      if (existing != null) (existing, false)
-      else {
+    * Tripwire: a caller passing a different slice under an existing
+    * name fails loudly instead of silently searching the wrong index —
+    * the corpus ROW COUNT is re-checked against the count recorded at
+    * build time, on the FIRST REUSE only (later hits skip the job: on
+    * an unstaged input every access was a full corpus scan). The count
+    * catches slice mixups, not adversarial same-cardinality swaps —
+    * the slice name remains the contract, the count is the tripwire. */
+  def buildShared(quant: DataFrame, dir: String, slice: String): (DataFrame, DataFrame) = {
+    var fresh = false
+    val (n0, refined, init, reuseChecked) =
+      graft.util.Staged.get(quant.sparkSession, s"nng.graph:$slice", dir) {
+        fresh = true
         val (r, i) = build(quant)
-        val e = (quant.count(), r, i,
-          new java.util.concurrent.atomic.AtomicBoolean(false))
-        builtMemo.put(key, e)
-        (e, true)
+        (quant.count(), r, i, new java.util.concurrent.atomic.AtomicBoolean(false))
       }
-    }
-    val (n0, refined, init, reuseChecked) = entry
     if (!fresh && !reuseChecked.getAndSet(true)) {
       val n = quant.count()
       require(n == n0,
-        s"buildShared tag '$tag' reused with a different corpus ($n rows vs $n0 at build) - " +
-        "tags must uniquely name the corpus slice")
+        s"buildShared slice '$slice' of $dir reused with a different corpus " +
+        s"($n rows vs $n0 at build) - slice names must uniquely name the corpus slice")
     }
     (refined, init)
   }

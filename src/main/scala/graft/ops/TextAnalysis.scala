@@ -969,20 +969,11 @@ object TextAnalysis {
   // ≥2 registered consumers, each key's own tail (probe join /
   // aggregate / total sort) runs per evaluation, and the builders are
   // deterministic so the memoized frame is content-identical to a
-  // fresh build (sibling hashes unchanged). Released via [[evictMemos]]
-  // with the other frame memos before the bench's serving blocks.
-  private val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  // fresh build (sibling hashes unchanged). Staged through
+  // [[graft.util.Staged]], which releases them with every other artifact.
   private def frameShared(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    frameMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    frameMemo.computeIfAbsent((spark, dir, tag), _ => build)
-  }
-  private[graft] def evictMemos(): Unit = {
-    import scala.jdk.CollectionConverters._
-    frameMemo.values.asScala.foreach(graft.util.Persist.release)
-    frameMemo.clear()
-  }
+      build: => DataFrame): DataFrame =
+    graft.util.Staged.get(spark, s"text.$tag", dir)(build)
 
   /** The distinct 8-token shingle-hash table (doc_id, sh) the
     * decontamination stages read — ONE definition, staged once per

@@ -1129,15 +1129,10 @@ object VectorSearch {
   //    a fresh train and every oracle hash is unchanged; only repeated
   //    construction work is skipped (in a deployment the trained
   //    centroids ARE the stored index artifact, computed once). Staged
-  //    frames are released through [[evictFrameMemos]] like the NNG
-  //    memos. ──────────────────────────────────────────────────────────
-  private val ivfModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (DataFrame, IvfIndex.IntModel)]()
+  //    through [[graft.util.Staged]] like every shared artifact. ─────────
   private def ivfModelShared(spark: SparkSession, dir: String, tag: String)(
-      build: => (DataFrame, IvfIndex.IntModel)): (DataFrame, IvfIndex.IntModel) = {
-    ivfModelMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    ivfModelMemo.computeIfAbsent((spark, dir, tag), _ => build)
-  }
+      build: => (DataFrame, IvfIndex.IntModel)): (DataFrame, IvfIndex.IntModel) =
+    graft.util.Staged.get(spark, s"vs.ivfModel:$tag", dir)(build)
 
   /** The trainer half of [[vsIvfTrained]]: staged int8-grid quantized
     * corpus (column `q`) + the integer-Lloyd model. Shared with the
@@ -1331,7 +1326,8 @@ object VectorSearch {
     * through the reloaded artifacts (model rebuilt from the centroid
     * table rows, assignment read from the catalog — no trainer run,
     * no memo lineage); oracle = the trained oracle verbatim. Written
-    * once per (context, dir), like the lake layouts. */
+    * once per (context, dir) through [[graft.util.Staged]], like the
+    * lake layouts. */
   final val IvfStoreBuckets = 8
   /** Catalog table name for a stored-index artifact, keyed by corpus
     * dir (r15 advice: the previous fixed names were swapped out by the
@@ -1344,16 +1340,10 @@ object VectorSearch {
   private[graft] def storedTable(base: String, dir: String): String =
     base + "_" + java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir) & 0x7fffffff)
-  private lazy val ivfStoreRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ivfstore").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val ivfStoreWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def ivfStoreRoot: String = s"${graft.util.Staged.root}/graft-ivfstore"
 
-  private[graft] def ensureIvfStored(spark: SparkSession, dir: String): Unit = {
-    ivfStoreWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private[graft] def ensureIvfStored(spark: SparkSession, dir: String): Unit =
+    graft.util.Staged.get(spark.sparkContext, "vs.ivfStore", dir) {
       val t = storedTable("graft_ivf_assign", dir)
       val (qv, model) = ivfTrainedModel(spark, dir)
       val sess = spark
@@ -1371,10 +1361,7 @@ object VectorSearch {
         qv.select(col("vec_id").as("c_id"),
           IvfIndex.intCellOf(col("q"), model).as("cell"), col("q").as("qd")),
         t, "cell", IvfStoreBuckets, s"$ivfStoreRoot/assign-${t.split('_').last}")
-      true
-    })
-    ()
-  }
+    }
 
   def vsIvfStore: Q = (spark, dir) => {
     ensureIvfStored(spark, dir)
@@ -2298,13 +2285,7 @@ object VectorSearch {
     * not SQL-replayable. Cost shape: one anti-join + one bucketed
     * write, never a retrain; the manifest is two index-sized scans. */
   final val IvfVacuumBuckets = 8
-  private lazy val ivfVacuumRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ivfvacuum").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val ivfVacuumWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def ivfVacuumRoot: String = s"${graft.util.Staged.root}/graft-ivfvacuum"
 
   /** Write gen-0 (two appends) and the vacuumed gen-1 once per
     * (context, dir); returns (gen0, gen1) table names and their data
@@ -2315,7 +2296,7 @@ object VectorSearch {
     val g1 = storedTable("graft_ivf_gen1", dir)
     val tag = g0.split('_').last
     val (p0, p1) = (s"$ivfVacuumRoot/gen0-$tag", s"$ivfVacuumRoot/gen1-$tag")
-    ivfVacuumWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+    graft.util.Staged.get(spark.sparkContext, "vs.ivfVacuum", dir) {
       val (qv, model) = ivfTrainedModel(spark, dir)
       val assigned = qv.select(col("vec_id").as("c_id"),
         IvfIndex.intCellOf(col("q"), model).as("cell"))
@@ -2330,8 +2311,7 @@ object VectorSearch {
       graft.sources.Sinks.writeBucketedAt(
         spark.table(g0).filter(col("c_id") % DeleteMod =!= 0), g1, "cell",
         IvfVacuumBuckets, p1)
-      true
-    })
+    }
     (g0, g1, p0, p1)
   }
 
@@ -2729,18 +2709,12 @@ object VectorSearch {
     * exact-cosine-verify tail runs per evaluation), the store build,
     * and [[vsLshReband]]'s rebanded generation (same full-count pick by
     * construction). Content-identical to a fresh banding pass (the
-    * plane mixer is deterministic), so every oracle hash is unchanged;
-    * released through [[evictFrameMemos]] before the bench's serving
-    * blocks like the other frame memos. */
-  private val lshTunedBandsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def lshTunedBandsShared(spark: SparkSession, dir: String): DataFrame = {
-    lshTunedBandsMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    lshTunedBandsMemo.computeIfAbsent((spark, dir), _ =>
+    * plane mixer is deterministic), so every oracle hash is unchanged. */
+  private[graft] def lshTunedBandsShared(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Staged.get(spark, "vs.lshTunedBands", dir)(
       graft.util.Persist.stage(
         lshBandsAdaptive(emb(spark, dir), "vec_id", "embedding",
           geo = lshTunedGeo), eager = false))
-  }
   def vsLshTuned: Q = (spark, dir) => {
     // r20 (r19 verdict #2): serve the candidate stage from the STORED
     // band table instead of re-hashing ~5.9k planes/row per evaluation
@@ -2801,13 +2775,7 @@ object VectorSearch {
     * cluster sizes it in the thousands (a store-time knob — the
     * artifact is rewritten by the same job that builds it). */
   final val LshStoreBuckets = 32
-  private lazy val lshStoreRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-lshstore").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val lshStoreWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def lshStoreRoot: String = s"${graft.util.Staged.root}/graft-lshstore"
 
   /** Store-time degenerate-bucket mask (r18 verdict #2): excise every
     * (band_idx, band_val) bucket above `cap` from a band table BEFORE
@@ -2849,8 +2817,8 @@ object VectorSearch {
   private[graft] val lastStoreMaskExcised =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[graft] def ensureLshStored(spark: SparkSession, dir: String): Unit = {
-    lshStoreWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private[graft] def ensureLshStored(spark: SparkSession, dir: String): Unit =
+    graft.util.Staged.get(spark.sparkContext, "vs.lshStore", dir) {
       val t = storedTable("graft_lsh_bands", dir)
       val bandsDf = maskDegenerateBands(
         lshTunedBandsShared(spark, dir), tag = t)
@@ -2871,10 +2839,7 @@ object VectorSearch {
         storedTable("graft_lsh_vecs", dir),
         "vec_id", LshStoreBuckets, s"$lshStoreRoot/vecs-${t.split('_').last}",
         compact = true)
-      true
-    })
-    ()
-  }
+    }
 
   def vsLshStore: Q = (spark, dir) => {
     ensureLshStored(spark, dir)
@@ -3102,13 +3067,7 @@ object VectorSearch {
     * survivor preservation are LshVacuumSpec's filesystem assertions.
     * Cost: one anti-join + one bucketed write at the geometry FROZEN
     * from store time — never a re-hash of the corpus. */
-  private lazy val lshVacuumRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-lshvacuum").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val lshVacuumWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def lshVacuumRoot: String = s"${graft.util.Staged.root}/graft-lshvacuum"
 
   /** Write gen-0 (two appends, then logically tombstoned) and the
     * vacuumed gen-1 once per (context, dir); returns (gen0, gen1)
@@ -3119,7 +3078,7 @@ object VectorSearch {
     val g1 = storedTable("graft_lsh_gen1", dir)
     val tag = g0.split('_').last
     val (p0, p1) = (s"$lshVacuumRoot/gen0-$tag", s"$lshVacuumRoot/gen1-$tag")
-    lshVacuumWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+    graft.util.Staged.get(spark.sparkContext, "vs.lshVacuum", dir) {
       val bandsDf = lshBandsAdaptive(emb(spark, dir), "vec_id", "embedding",
         geo = lshTunedGeo)
       graft.sources.Sinks.writeBucketedAt(
@@ -3133,8 +3092,7 @@ object VectorSearch {
       graft.sources.Sinks.writeBucketedAt(
         spark.table(g0).filter(col("vec_id") % DeleteMod =!= 0), g1,
         "band_val", LshStoreBuckets, p1, compact = true)
-      true
-    })
+    }
     (g0, g1, p0, p1)
   }
 
@@ -3195,13 +3153,7 @@ object VectorSearch {
     * SCHEDULED job, amortized across the appends that demanded it,
     * never a per-append price ([[vsLshUpsert]] stays O(|batch|)). */
   final val RebandBaseMod = 2L
-  private lazy val lshRebandRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-lshreband").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val lshRebandWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def lshRebandRoot: String = s"${graft.util.Staged.root}/graft-lshreband"
 
   def vsLshReband: Q = (spark, dir) =>
     // The rebanded generation is the full-count tuned-pick band frame —
@@ -3232,15 +3184,14 @@ object VectorSearch {
       if (due == 0L) degraded
       else storeDir match {
         case Some(d) =>
-          lshRebandWritten.computeIfAbsent((spark.sparkContext, d), _ => {
+          graft.util.Staged.get(spark.sparkContext, "vs.lshReband", d) {
             val t = storedTable("graft_lsh_reband", d)
             graft.sources.Sinks.writeBucketedAt(
               fullBands.map(_.apply()).getOrElse(
                 lshBands(e, "vec_id", "embedding", rNew, bNew)), t,
               "band_val", LshStoreBuckets, s"$lshRebandRoot/gen-${t.split('_').last}",
               compact = true)
-            true
-          })
+          }
           spark.table(storedTable("graft_lsh_reband", d))
         case None => lshBands(e, "vec_id", "embedding", rNew, bNew)
       }
@@ -3475,14 +3426,10 @@ object VectorSearch {
   //    grades. The memoized frames are content-identical to the inline
   //    spellings, so every sibling hash is untouched — only the
   //    rebuild cost goes away. ────────────────────────────────────────
-  private val nngQvMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   /** The staged int8 grid every graph key quantizes from. */
-  private[graft] def nngQv(spark: SparkSession, dir: String): DataFrame = {
-    nngQvMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    nngQvMemo.computeIfAbsent((spark, dir), _ =>
+  private[graft] def nngQv(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Staged.get(spark, "vs.int8Grid", dir)(
       graft.util.Persist.stage(int8Grid(spark, dir), eager = false))
-  }
   /** The same memoized staged grid under a family-neutral name (r19
     * optimization: the PQ / sparse / MaxSim / MMR keys and the
     * streaming serve twins each re-ran [[int8Grid]]'s maxabs pass +
@@ -3491,8 +3438,6 @@ object VectorSearch {
     * two-pass quantization goes away). */
   private[graft] def int8GridShared(spark: SparkSession, dir: String): DataFrame =
     nngQv(spark, dir)
-  private val nngExactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
   /** Staged exact top-K truth for a FULL-corpus grade at query slice
     * `vec_id % 100 == mod` — identical between [[vsNngSearch]] and
     * [[vsNngLoad]] (both grade slice 0 against the full corpus), so it
@@ -3510,8 +3455,7 @@ object VectorSearch {
     require(qv eq nngQv(spark, dir),
       "nngExactFull requires the unfiltered nngQv grid for (session, dir) - " +
       "filtered/survivor corpora must grade inline (exactMemo = None)")
-    nngExactMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    nngExactMemo.computeIfAbsent((spark, dir, mod), _ => {
+    graft.util.Staged.get(spark, s"vs.nngExact:$mod", dir) {
       val wQ = Window.partitionBy("q_id").orderBy(col("d2"), col("c_id"))
       graft.util.Persist.stage(
         qv.crossJoin(broadcast(qs))
@@ -3520,7 +3464,7 @@ object VectorSearch {
           .withColumn("rn", row_number().over(wQ))
           .filter(col("rn") <= NnGraph.TopK).select("q_id", "c_id"),
         eager = false)
-    })
+    }
   }
 
   // ── NNG shared hop-chain memos (r18 verdict #4: the filtered/upsert/
@@ -3533,22 +3477,15 @@ object VectorSearch {
   //    graphs are fixed by the key contracts — so the memoized frame is
   //    content-identical to a fresh build and every sibling hash is
   //    unchanged; only repeated construction work is skipped (a serving
-  //    node computes its working set once). Keyed by a chain TAG that
-  //    embeds dir + chain identity; per-micro-batch placement calls
-  //    (query set = the batch) never go through the memo. ─────────────
-  private val nngChainMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Memoized hop-chain frame for `tag`; `build` runs once per
-    * (session, tag). The built frame's tail is already staged (every
-    * [[NnGraph.search]] hop checkpoints), so the value is stored as-is.
-    * Builders must not re-enter this memo (nested computeIfAbsent on
-    * one map can deadlock) — compute prerequisite chains BEFORE the
-    * dependent call, as [[vsNngFiltered]] does. */
-  private[graft] def nngChainShared(spark: SparkSession, tag: String)(
-      build: => DataFrame): DataFrame = {
-    nngChainMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    nngChainMemo.computeIfAbsent((spark, tag), _ => build)
-  }
+  //    node computes its working set once). Keyed by chain identity;
+  //    per-micro-batch placement calls (query set = the batch) never go
+  //    through the memo. ────────────────────────────────────────────────
+  /** Memoized hop-chain frame `chain` of `dir`; `build` runs once per
+    * (session, dir). The built frame's tail is already staged (every
+    * [[NnGraph.search]] hop checkpoints), so the value is stored as-is. */
+  private[graft] def nngChainShared(spark: SparkSession, dir: String, chain: String)(
+      build: => DataFrame): DataFrame =
+    graft.util.Staged.get(spark, s"vs.nngChain:$chain", dir)(build)
 
   /** Shared grade: visited set vs exact top-K, one row per query with
     * the corpus-mean recall and the floor flag (the [[vsNngSearch]] /
@@ -3587,11 +3524,11 @@ object VectorSearch {
     // One staged evaluation of the grid — the build rounds, the search
     // hops and the exact baseline all reuse it (memoized family-wide).
     val qv = nngQv(spark, dir)
-    val (graph, init) = NnGraph.buildShared(qv, s"$dir#full")
+    val (graph, init) = NnGraph.buildShared(qv, dir, "full")
     val qs = qv.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     nngGrade(qv, qs,
-      nngChainShared(spark, s"$dir#chain:search")(
+      nngChainShared(spark, dir, "search")(
         NnGraph.search(graph, init, qv, qs)),
       exactMemo = Some((spark, dir, 0)))
   }
@@ -3777,31 +3714,22 @@ object VectorSearch {
     * (index-sized); bucketing by src lets a serving cluster hash-join
     * each hop's frontier against bucket-pruned index files. */
   final val NngStoreBuckets = 8
-  private lazy val nngStoreRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-nngstore").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val nngStoreWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def nngStoreRoot: String = s"${graft.util.Staged.root}/graft-nngstore"
 
   /** Build (memo-shared with the other lifecycle keys) and persist the
     * full-corpus graph index once per (context, dir). Catalog tables,
     * like the lake copies, are context-shared: `newSession()` clones
     * see them — exactly the cross-session serving shape under test. */
-  private def ensureNngStored(spark: SparkSession, dir: String): Unit = {
-    nngStoreWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private def ensureNngStored(spark: SparkSession, dir: String): Unit =
+    graft.util.Staged.get(spark.sparkContext, "vs.nngStore", dir) {
       val tag = storedTable("x", dir).split('_').last
       val qv = nngQv(spark, dir)
-      val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+      val (refined, init) = NnGraph.buildShared(qv, dir, "full")
       graft.sources.Sinks.writeBucketedAt(refined, storedTable("graft_nng_refined", dir),
         "src", NngStoreBuckets, s"$nngStoreRoot/refined-$tag")
       graft.sources.Sinks.writeBucketedAt(init, storedTable("graft_nng_init", dir),
         "src", NngStoreBuckets, s"$nngStoreRoot/init-$tag")
-      true
-    })
-    ()
-  }
+    }
 
   /** Store manifest, computed FROM THE RELOADED TABLES so the hashed
     * output verifies the write→read round-trip content, not the
@@ -3931,7 +3859,7 @@ object VectorSearch {
     val qv = nngQv(spark, dir)
     val base = graft.util.Persist.stage(
       qv.filter(col("vec_id") % UpsertMod =!= 0), eager = false)
-    val (refined, init) = NnGraph.buildShared(base, s"$dir#base$UpsertMod")
+    val (refined, init) = NnGraph.buildShared(base, dir, s"base$UpsertMod")
     val qsNew = qv.filter(col("vec_id") % UpsertMod === 0)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     (qv, base, refined, init, qsNew)
@@ -3946,7 +3874,7 @@ object VectorSearch {
   private[graft] def nngPlacementShared(spark: SparkSession, dir: String)
       : DataFrame = {
     val (_, base, refined, init, qsNew) = nngUpsertArtifacts(spark, dir)
-    nngChainShared(spark, s"$dir#chain:place")(graft.util.Persist.stage(
+    nngChainShared(spark, dir, "place")(graft.util.Persist.stage(
       nngPlacementEdges(refined, init, base, qsNew), eager = false))
   }
 
@@ -3961,7 +3889,7 @@ object VectorSearch {
       .select("src", "dst", "d2")
     val updated = repaired.unionByName(newEdges)
     nngGrade(qv, qsNew,
-      nngChainShared(spark, s"$dir#chain:upsert-grade")(
+      nngChainShared(spark, dir, "upsert-grade")(
         NnGraph.search(updated, init, qv, qsNew, entrySource = Some(base))))
   }
 
@@ -4089,7 +4017,7 @@ object VectorSearch {
 
   def vsNngDelete: Q = (spark, dir) => {
     val qv = nngQv(spark, dir)
-    val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+    val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val sur = graft.util.Persist.stage(
       qv.filter(col("vec_id") % DeleteMod =!= 0), eager = false)
     def vic(c: Column): Column = c % DeleteMod === 0
@@ -4103,7 +4031,7 @@ object VectorSearch {
     val qsDel = sur.filter(col("vec_id") % 100 === 5)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     nngGrade(sur, qsDel,
-      nngChainShared(spark, s"$dir#chain:delete-grade")(
+      nngChainShared(spark, dir, "delete-grade")(
         NnGraph.search(patched, initSur, sur, qsDel)))
   }
 
@@ -4161,13 +4089,7 @@ object VectorSearch {
     * preservation are NngVacuumSpec's filesystem assertions. Cost: one
     * anti-join + one bucketed write over the n·K edge table (index-
     * sized, never the corpus) — no rebuild, no re-descent. */
-  private lazy val nngVacuumRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-nngvacuum").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val nngVacuumWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def nngVacuumRoot: String = s"${graft.util.Staged.root}/graft-nngvacuum"
 
   /** Write gen-0 (two appends, logically tombstoned) and the vacuumed
     * gen-1 once per (context, dir); returns (gen0, gen1) table names
@@ -4178,9 +4100,9 @@ object VectorSearch {
     val g1 = storedTable("graft_nng_gen1", dir)
     val tag = g0.split('_').last
     val (p0, p1) = (s"$nngVacuumRoot/gen0-$tag", s"$nngVacuumRoot/gen1-$tag")
-    nngVacuumWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+    graft.util.Staged.get(spark.sparkContext, "vs.nngVacuum", dir) {
       val qv = nngQv(spark, dir)
-      val (refined, _) = NnGraph.buildShared(qv, s"$dir#full")
+      val (refined, _) = NnGraph.buildShared(qv, dir, "full")
       graft.sources.Sinks.writeBucketedAt(
         refined.filter(col("src") % UpsertMod =!= 0), g0, "src",
         NngStoreBuckets, p0)
@@ -4192,8 +4114,7 @@ object VectorSearch {
       graft.sources.Sinks.writeBucketedAt(
         spark.table(g0).filter(col("src") % DeleteMod =!= 0 &&
           col("dst") % DeleteMod =!= 0), g1, "src", NngStoreBuckets, p1)
-      true
-    })
+    }
     (g0, g1, p0, p1)
   }
 
@@ -4309,61 +4230,31 @@ object VectorSearch {
     * p3_fat alone is |pass|·|Q| kernel calls per evaluation, the
     * measured sf1 bulk of both keys). Same plan-level-reuse posture as
     * [[NnGraph.buildShared]] (the planner's predicate slices and truth
-    * tables are a deployment's stored evaluation artifacts): bounded
-    * LRU, stopped sessions evicted, keyed by (session, dir). */
+    * tables are a deployment's stored evaluation artifacts). */
   private type PlannerArts =
     (DataFrame, DataFrame, Seq[(String, DataFrame, Long, DataFrame)])
-  /** Unpersist an evicted entry's staged frames (qv + each arm's pass
-    * slice and exact table) — without this an LRU-evicted live-session
-    * entry leaked its cached blocks for the JVM lifetime (r14 advice). */
-  private def releasePlannerArts(arts: PlannerArts): Unit = {
-    val (qv, _, arms) = arts
-    graft.util.Persist.release(qv)
-    arms.foreach { case (_, fcorp, _, exact) =>
-      graft.util.Persist.release(fcorp)
-      graft.util.Persist.release(exact)
-    }
-  }
-  private val plannerMemo =
-    new java.util.LinkedHashMap[(SparkSession, String), PlannerArts](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), PlannerArts]): Boolean = {
-        val evict = size() > 8
-        if (evict) releasePlannerArts(e.getValue)
-        evict
-      }
-    }
   private def plannerArtifacts(spark: SparkSession, dir: String): PlannerArts =
-    plannerMemo.synchronized {
-      plannerMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-      val key = (spark, dir)
-      val existing = plannerMemo.get(key)
-      if (existing != null) existing
-      else {
-        // Deliberately its own staged copy, NOT the shared nngQv frame:
-        // releasePlannerArts releases qv on LRU eviction, which must
-        // never unpersist a frame another memo still serves.
-        val qv = graft.util.Persist.stage(int8Grid(spark, dir), eager = false)
-        val qs = qv.filter(col("vec_id") % 100 === 9)
-          .select(col("vec_id").as("q_id"), col("qd").as("qq"))
-        val wQ = Window.partitionBy("pred", "q_id").orderBy(col("d2"), col("c_id"))
-        val arms = plannerPreds(spark, dir).map { case (tag, pass) =>
-          val fcorp = graft.util.Persist.stage(
-            qv.join(pass, "vec_id").withColumn("pred", lit(tag)), eager = false)
-          val nPass = fcorp.count()
-          val exact = graft.util.Persist.stage(
-            fcorp.crossJoin(broadcast(qs))
-              .select(col("pred"), col("q_id"), col("vec_id").as("c_id"),
-                NnGraph.intD2(col("qd"), col("qq")).as("d2"))
-              .withColumn("rn", row_number().over(wQ))
-              .filter(col("rn") <= NnGraph.TopK).select("pred", "q_id", "c_id"),
-            eager = false)
-          (tag, fcorp, nPass, exact)
-        }
-        val e = (qv, qs, arms)
-        plannerMemo.put(key, e)
-        e
+    graft.util.Staged.get(spark, "vs.planner", dir) {
+      // Its own staged grid, not the shared nngQv frame: a value holds
+      // only frames its build staged (see graft.util.Staged).
+      val qv = graft.util.Persist.stage(int8Grid(spark, dir), eager = false)
+      val qs = qv.filter(col("vec_id") % 100 === 9)
+        .select(col("vec_id").as("q_id"), col("qd").as("qq"))
+      val wQ = Window.partitionBy("pred", "q_id").orderBy(col("d2"), col("c_id"))
+      val arms = plannerPreds(spark, dir).map { case (tag, pass) =>
+        val fcorp = graft.util.Persist.stage(
+          qv.join(pass, "vec_id").withColumn("pred", lit(tag)), eager = false)
+        val nPass = fcorp.count()
+        val exact = graft.util.Persist.stage(
+          fcorp.crossJoin(broadcast(qs))
+            .select(col("pred"), col("q_id"), col("vec_id").as("c_id"),
+              NnGraph.intD2(col("qd"), col("qq")).as("d2"))
+            .withColumn("rn", row_number().over(wQ))
+            .filter(col("rn") <= NnGraph.TopK).select("pred", "q_id", "c_id"),
+          eager = false)
+        (tag, fcorp, nPass, exact)
       }
+      (qv, qs, arms)
     }
 
   // ── Shared grading-arm memos (r16 verdict #3: the planner quadruplet
@@ -4371,28 +4262,19 @@ object VectorSearch {
   //    The four keys differ ONLY in where n_est comes from; the arms
   //    are routing-independent, so each is built and staged ONCE per
   //    (session, dir) like [[NnGraph.buildShared]]. ──────────────────
-  private val plannerGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (DataFrame, DataFrame, DataFrame)]()
   /** Graph build + the base hop frame for the standard query slice. */
   private def plannerGraphParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    plannerGraphMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    plannerGraphMemo.computeIfAbsent((spark, dir), _ => {
-      val (qv, qs, _) = plannerArtifacts(spark, dir)
-      val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
-      val base = graft.util.Persist.stage(
-        NnGraph.search(refined, init, qv, qs), eager = false)
-      (refined, init, base)
-    })
+    val (qv, qs, _) = plannerArtifacts(spark, dir)
+    val (refined, init) = NnGraph.buildShared(qv, dir, "full")
+    val base = graft.util.Staged.get(spark, "vs.plannerGraph", dir)(
+      graft.util.Persist.stage(NnGraph.search(refined, init, qv, qs), eager = false))
+    (refined, init, base)
   }
-  private val plannerGraphArmMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   /** Per-predicate staged GRAPH-arm frame (base survivors ∪ escalation,
     * top-K cut) — shared verbatim across the planner keys. */
-  private def plannerGraphArm(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    plannerGraphArmMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    plannerGraphArmMemo.computeIfAbsent((spark, dir, tag), _ => {
+  private def plannerGraphArm(spark: SparkSession, dir: String, tag: String): DataFrame =
+    graft.util.Staged.get(spark, s"vs.plannerGraphArm:$tag", dir) {
       val (qv, qs, preds) = plannerArtifacts(spark, dir)
       val (t, fcorp, nPass, _) = preds.find(_._1 == tag)
         .getOrElse(sys.error(s"unknown planner predicate $tag"))
@@ -4400,72 +4282,27 @@ object VectorSearch {
       graft.util.Persist.stage(
         plannerGraphApprox(qv, qs, fcorp, nPass, t, wQ, plannerGraphParts(spark, dir)),
         eager = false)
-    })
-  }
-  private val plannerIvfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (IvfIndex.IntModel, DataFrame, DataFrame)]()
+    }
   /** The IVF arm (trained model + staged assignment + per-query probes),
     * memoized per (session, dir): the ANALYZE-time occupancy persist
     * ([[ensurePlannerStats]]) and the route key's serving arm share ONE
     * training. */
   private[graft] def plannerIvfParts(spark: SparkSession, dir: String)
       : (IvfIndex.IntModel, DataFrame, DataFrame) = {
-    plannerIvfMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    plannerIvfMemo.computeIfAbsent((spark, dir), _ => {
-      val (qv, qs, _) = plannerArtifacts(spark, dir)
+    val (qv, qs, _) = plannerArtifacts(spark, dir)
+    val (model, assigned) = graft.util.Staged.get(spark, "vs.plannerIvf", dir) {
       val model = IvfIndex.fitInt(qv, "vec_id", "qd", k = PlanIvfCells, iters = 2)
-      val assigned = graft.util.Persist.stage(
+      (model, graft.util.Persist.stage(
         qv.select(col("vec_id").as("c_id"),
-          IvfIndex.intCellOf(col("qd"), model).as("cell")), eager = false)
-      val probeStructs = model.centroids.map { case (cid, cv) =>
-        struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-      }
-      val probes = qs.select(col("q_id"),
-          explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
-        .select(col("q_id"), col("p.cid").as("cell"))
-      (model, assigned, probes)
-    })
-  }
-
-  /** Release every long-lived frame memo's staged blocks and CLEAR the
-    * maps (r18 advice). A blanket `getPersistentRDDs.unpersist` (the
-    * bench's pre-serving cache flush) invalidates the localCheckpoint
-    * blocks these memos' frames are backed by — the lineage is
-    * truncated, so a later hit on a still-populated memo would serve a
-    * permanently unrecomputable frame ("checkpoint block not found").
-    * Eviction must therefore pair release with map clearing: after
-    * this call a consumer rebuilds from source instead of reading a
-    * stale pin. Driver-side memos (w2vFrozenMemo — plain arrays, no
-    * Spark state) are unaffected and stay. */
-  private[graft] def evictFrameMemos(): Unit = {
-    import scala.jdk.CollectionConverters._
-    nngQvMemo.values.asScala.foreach(graft.util.Persist.release)
-    nngQvMemo.clear()
-    nngExactMemo.values.asScala.foreach(graft.util.Persist.release)
-    nngExactMemo.clear()
-    plannerMemo.synchronized {
-      plannerMemo.values.asScala.foreach(releasePlannerArts)
-      plannerMemo.clear()
+          IvfIndex.intCellOf(col("qd"), model).as("cell")), eager = false))
     }
-    plannerGraphMemo.values.asScala.foreach { case (_, _, base) =>
-      graft.util.Persist.release(base)  // refined/init belong to NnGraph.builtMemo
+    val probeStructs = model.centroids.map { case (cid, cv) =>
+      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
     }
-    plannerGraphMemo.clear()
-    plannerGraphArmMemo.values.asScala.foreach(graft.util.Persist.release)
-    plannerGraphArmMemo.clear()
-    plannerIvfMemo.values.asScala.foreach { case (_, assigned, _) =>
-      graft.util.Persist.release(assigned)
-    }
-    plannerIvfMemo.clear()
-    nngChainMemo.values.asScala.foreach(graft.util.Persist.release)
-    nngChainMemo.clear()
-    ivfModelMemo.values.asScala.foreach { case (grid, _) =>
-      graft.util.Persist.release(grid)
-    }
-    ivfModelMemo.clear()
-    lshTunedBandsMemo.values.asScala.foreach(graft.util.Persist.release)
-    lshTunedBandsMemo.clear()
+    val probes = qs.select(col("q_id"),
+        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
+      .select(col("q_id"), col("p.cid").as("cell"))
+    (model, assigned, probes)
   }
 
   /** `routeStat`: the statistic the ROUTING decision reads — None =
@@ -4687,20 +4524,14 @@ object VectorSearch {
     * integer arithmetic (products ≤ N², truncating `//` both engines),
     * replayed by the oracle from the same histograms. */
   final val PlannerStatsTable = "graft_planner_stats"
-  private lazy val plannerStatsRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-plannerstats").toFile
-    graft.util.Persist.deleteOnExit(d)
-    d.toString
-  }
-  private val plannerStatsWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
+  private def plannerStatsRoot: String = s"${graft.util.Staged.root}/graft-plannerstats"
 
   /** ANALYZE: one scan of the joined planner corpus stacked into
     * (col_name, value, cnt) histogram rows plus the `_total` row,
     * persisted as an external parquet catalog table once per
     * (context, dir). */
-  private def ensurePlannerStats(spark: SparkSession, dir: String): Unit = {
-    plannerStatsWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private def ensurePlannerStats(spark: SparkSession, dir: String): Unit =
+    graft.util.Staged.get(spark.sparkContext, "vs.plannerStats", dir) {
       val t = storedTable(PlannerStatsTable, dir)
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       val d = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
@@ -4725,10 +4556,7 @@ object VectorSearch {
         .write.mode("overwrite").format("parquet")
         .option("path", s"$plannerStatsRoot/stats-${t.split('_').last}")
         .saveAsTable(t)
-      true
-    })
-    ()
-  }
+    }
 
   /** Skew-aware cost(IVF) from the persisted ANALYZE table: the sum of
     * the nprobe LARGEST cell occupancies — the worst-case rows a probe
@@ -4808,10 +4636,8 @@ object VectorSearch {
     * tiny stats-table reads per run; the ANALYZE scans are once-per-
     * corpus artifacts like [[ensurePlannerStats]]'s. */
   private[graft] final val PlannerStatsPostTable = "graft_planner_stats2"
-  private val plannerStatsPostWritten =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Boolean]()
-  private def ensurePlannerStatsPost(spark: SparkSession, dir: String): Unit = {
-    plannerStatsPostWritten.computeIfAbsent((spark.sparkContext, dir), _ => {
+  private def ensurePlannerStatsPost(spark: SparkSession, dir: String): Unit =
+    graft.util.Staged.get(spark.sparkContext, "vs.plannerStatsPost", dir) {
       val t = storedTable(PlannerStatsPostTable, dir)
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       val d = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
@@ -4836,10 +4662,7 @@ object VectorSearch {
         .write.mode("overwrite").format("parquet")
         .option("path", s"$plannerStatsRoot/stats2-${t.split('_').last}")
         .saveAsTable(t)
-      true
-    })
-    ()
-  }
+    }
 
   def vsPlannedRefresh: Q = (spark, dir) => {
     val sess = spark
@@ -5171,12 +4994,13 @@ object VectorSearch {
     * merged graph (long links = BOTH segments' init edges) vs exact
     * top-5 over the union corpus. Measured at sf1: r12 merged recall
     * 0.871 vs 0.877 from-scratch — inside the ±0.016 entry-set band
-    * (EntrySens: six entry sets on ONE graph span 0.846-0.877), so
-    * merge ≈ rebuild on quality, never a cliff (r11, legacy entries,
-    * read 0.883 vs 0.859 — the ordering flips within the band; the
-    * union's two edge sets + two init-link sets keep it competitive).
+    * (EntrySens, commit dce4359: six entry sets on ONE graph span
+    * 0.846-0.877), so merge ≈ rebuild on quality, never a cliff (r11,
+    * legacy entries, read 0.883 vs 0.859 — the ordering flips within
+    * the band; the union's two edge sets + two init-link sets keep it
+    * competitive).
     * UNBALANCED consolidation (the production shape — big base + small
-    * fresh segment, graft.tools.MergeSkew at a 19:1 split): overall
+    * fresh segment, MergeSkew of commit dce4359 at a 19:1 split): overall
     * 0.883, small-segment queries 0.876 vs big-segment 0.887, 82,038
     * cross-seed pairs — the chain-link cross-seed budget needs no
     * per-segment floor at 19:1 because chain linking is per-BUCKET:
@@ -5203,13 +5027,13 @@ object VectorSearch {
     // visited chain is content-identical to a fresh build and the
     // oracle hash is unchanged; a deployment consolidates once and
     // serves the merged artifact.
-    val visited = nngChainShared(spark, s"$dir#chain:merge") {
+    val visited = nngChainShared(spark, dir, "merge") {
       val ca = graft.util.Persist.stage(
         qv.filter(col("vec_id") % MergeMod =!= 0), eager = false)
       val cb = graft.util.Persist.stage(
         qv.filter(col("vec_id") % MergeMod === 0), eager = false)
-      val (ga, initA) = NnGraph.buildShared(ca, s"$dir#mergeA")
-      val (gb, initB) = NnGraph.buildShared(cb, s"$dir#mergeB")
+      val (ga, initA) = NnGraph.buildShared(ca, dir, "mergeA")
+      val (gb, initB) = NnGraph.buildShared(cb, dir, "mergeB")
       def inB(c: Column): Column = c % MergeMod === 0
       val cross = NnGraph.seedGraph(qv)
         .filter(inB(col("src")) =!= inB(col("dst")))
@@ -5330,7 +5154,7 @@ object VectorSearch {
     (NnGraph.Entries + NnGraph.EscHops.toLong * NnGraph.EscBeam * NnGraph.K) / 2L
   def vsNngFiltered: Q = (spark, dir) => {
     val qv = nngQv(spark, dir)
-    val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+    val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val pass = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       .filter(col("label") === 7)
       .join(Tables.documents(spark, dir).filter(col("lang") === "de")
@@ -5343,10 +5167,8 @@ object VectorSearch {
     val qs = qv.filter(col("vec_id") % 100 === 3)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     // Both hop chains memoized per (session, dir) — the base chain and
-    // the (deterministic) escalation chain over the deficient slice are
-    // computed SEQUENTIALLY so the second memo call never nests inside
-    // the first (see nngChainShared).
-    val baseChain = nngChainShared(spark, s"$dir#chain:filtered-base")(
+    // the (deterministic) escalation chain over the deficient slice.
+    val baseChain = nngChainShared(spark, dir, "filtered-base")(
       NnGraph.search(refined, init, qv, qs))
     val baseSurv = graft.util.Persist.stage(
       baseChain
@@ -5359,7 +5181,7 @@ object VectorSearch {
       .agg(countDistinct("c_id").as("n_surv"))
       .filter(col("n_surv") >= FilterMinSurvivors && coverageOk).select("q_id")
     val deficient = qs.join(sufficient, Seq("q_id"), "left_anti")
-    val escChain = nngChainShared(spark, s"$dir#chain:filtered-esc")(
+    val escChain = nngChainShared(spark, dir, "filtered-esc")(
       NnGraph.search(refined, init, qv, deficient,
         NnGraph.Entries, NnGraph.EscBeam, NnGraph.EscHops))
     val escSurv = escChain

@@ -1061,19 +1061,9 @@ object Streaming {
     * shared staged memo ([[graft.ops.VectorSearch.int8GridShared]])
     * instead of a private re-quantize + re-stage. Deterministic, so
     * content-identical to a fresh build (hashes unchanged). */
-  private val searchIvfIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (graft.ops.IvfIndex.IntModel, DataFrame)]()
-  private[graft] def evictSearchIvfMemo(): Unit = {
-    import scala.jdk.CollectionConverters._
-    searchIvfIndexMemo.values.asScala.foreach { case (_, assigned) =>
-      graft.util.Persist.release(assigned)
-    }
-    searchIvfIndexMemo.clear()
-  }
   private def searchIvfIndex(spark: SparkSession, dir: String)
-      : (graft.ops.IvfIndex.IntModel, DataFrame) = {
-    searchIvfIndexMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    searchIvfIndexMemo.computeIfAbsent((spark, dir), _ => {
+      : (graft.ops.IvfIndex.IntModel, DataFrame) =
+    graft.util.Staged.get(spark, "stream.searchIvf", dir) {
       val qv = graft.ops.VectorSearch.int8GridShared(spark, dir)
       val model = graft.ops.IvfIndex.fitInt(qv, "vec_id", "qd", k = 8, iters = 2)
       val assigned = graft.util.Persist.stage(
@@ -1081,8 +1071,7 @@ object Streaming {
           graft.ops.IvfIndex.intCellOf(col("qd"), model).as("cell"), col("qd")),
         eager = false)
       (model, assigned)
-    })
-  }
+    }
   private def probeCells(model: graft.ops.IvfIndex.IntModel): Column = {
     val structs = model.centroids.map { case (cid, cv) =>
       struct(graft.ops.IvfIndex.intD2(col("qq"), cv).as("d2"),

@@ -27,7 +27,7 @@ object NngFilterAudit {
     for (dir <- args) {
       val qv = graft.util.Persist.stage(
         VectorSearch.int8Grid(spark, dir), eager = false)
-      val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+      val (refined, init) = NnGraph.buildShared(qv, dir, "full")
       val pass = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
         .filter(col("label") === 7)
         .join(Tables.documents(spark, dir).filter(col("lang") === "de")

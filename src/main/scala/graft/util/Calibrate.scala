@@ -55,7 +55,7 @@ object Calibrate {
 
   /** The spin timed in a FRESH subprocess JVM — the sentinel variant
     * Bench and Steady use (r14). Measured instrument bug with the
-    * in-JVM spin (tools/CalProbe, this host class): after 60 s of
+    * in-JVM spin (CalProbe, commit b729cb2, this host class): after 60 s of
     * 32-thread load INSIDE a JVM, that JVM's single-thread spin reads
     * 1.27–1.32× its fresh value and NEVER recovers (flat through 6 min
     * of idle), while fresh JVMs started on the same host during that

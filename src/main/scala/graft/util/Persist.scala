@@ -64,10 +64,10 @@ object Persist {
     * localCheckpoint'd Dataset is NOT in the CacheManager (unpersist()
     * on the Dataset is a no-op for it) — the cached data hangs off the
     * LogicalRDD leaf the checkpoint left in the plan, so eviction from
-    * a frame memo (plannerMemo, buildShared) must unpersist THAT RDD
+    * the artifact registry ([[Staged]]) must unpersist THAT RDD
     * or the blocks live for the JVM (r14 advice). Non-blocking and
-    * swallow-all: release runs inside memo eviction, where a stopped
-    * context or an analyzer error must never break the put(). */
+    * swallow-all: release runs inside registry eviction, where a stopped
+    * context or an analyzer error must never break the caller. */
   private[graft] def release(df: DataFrame): Unit =
     try {
       if (!df.sparkSession.sparkContext.isStopped)

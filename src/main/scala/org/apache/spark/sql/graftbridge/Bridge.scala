@@ -13,10 +13,16 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Register a temp SQL function backed by a Catalyst expression builder,
-    * making graft kernels usable inside `expr(...)` lambdas and spark.sql. */
+    * making graft kernels usable inside `expr(...)` lambdas and spark.sql.
+    * A name the session's registry already holds is left as it is:
+    * replacing it would only log a "replaced a previously registered
+    * function" WARN per call. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 
   /** Apply a SparkSessionExtensions' injected functions to a live session
     * (spark.sql.extensions is a static conf — it only takes effect for the

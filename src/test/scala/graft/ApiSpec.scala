@@ -10,11 +10,15 @@ class ApiSpec extends SparkSpec {
 
   test("GraftExtensions registers kernels as SQL functions") {
     // spark.sql.extensions is a static conf (first session of the JVM
-    // only), so apply the same injections to the shared test session.
+    // only), so apply the same injections to a new session of the test
+    // context — its registry holds none of the kernels yet, so only the
+    // extension path can make the queries below resolve.
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    org.apache.spark.sql.graftbridge.Bridge.applyFunctionExtensions(spark, ext)
-    val r = spark.sql(
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("cosine_similarity"))
+    org.apache.spark.sql.graftbridge.Bridge.applyFunctionExtensions(fresh, ext)
+    val r = fresh.sql(
       "SELECT cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)) c, " +
       "poly_hash('abc') h").head()
     assert(r.getDouble(0) == 1.0)
@@ -22,7 +26,7 @@ class ApiSpec extends SparkSpec {
     // aggregates too — incl. the r14 deduping KMV heap (duplicates in
     // the SQL stream must not occupy extra slots: 3rd-smallest distinct
     // of {0,0,1,1,2,2,5} is 2)
-    val a = spark.sql(
+    val a = fresh.sql(
       "SELECT kth_min(v, 3) k, kmv_kth_min(v, 3) kd " +
       "FROM VALUES (0L),(0L),(1L),(1L),(2L),(2L),(5L) AS t(v)").head()
     assert(a.getLong(0) == 1L) // duplicate-sensitive heap: {0,0,1}

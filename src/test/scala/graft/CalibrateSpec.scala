@@ -31,7 +31,8 @@ class CalibrateSpec extends AnyFunSuite {
     // order of magnitude. A parse/classpath bug in the subprocess path
     // falls back to the in-JVM spin and still passes here — the
     // fallback prints loudly, and the ambient-vs-JVM-state distinction
-    // is pinned by tools/CalProbe evidence, not unit-testable timing.
+    // is pinned by CalProbe evidence (commit b729cb2), not unit-testable
+    // timing.
     val inJvm = graft.util.Calibrate.spinSeconds()
     assert(graft.util.Calibrate.ratio(iso, inJvm) < 5.0,
       s"isolated=$iso vs in-JVM=$inJvm disagree implausibly")

@@ -55,7 +55,7 @@ class NngFilteredSpec extends SparkSpec {
     // queries escalate — both branches execute in one graded run.
     def census(dir: String): (Long, Long) = {
       val qv = VectorSearch.int8Grid(spark, dir)
-      val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+      val (refined, init) = NnGraph.buildShared(qv, dir, "full")
       val p = pass(dir)
       val nPass = p.count()
       val qs = qv.filter(col("vec_id") % 100 === 3)
@@ -87,7 +87,7 @@ class NngFilteredSpec extends SparkSpec {
     // re-running the op's survivor pipeline and checking the top-5.
     val dir = "/root/testdata/sf0.1"
     val qv = VectorSearch.int8Grid(spark, dir)
-    val (refined, init) = NnGraph.buildShared(qv, s"$dir#full")
+    val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val p = pass(dir)
     val qs = qv.filter(col("vec_id") % 100 === 3)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))

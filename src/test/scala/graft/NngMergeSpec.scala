@@ -38,8 +38,8 @@ class NngMergeSpec extends SparkSpec {
       c % VectorSearch.MergeMod === 0
     val ca = qv.filter(!inB(col("vec_id")))
     val cb = qv.filter(inB(col("vec_id")))
-    val (ga, _) = NnGraph.buildShared(ca, s"$dir#mergeA")
-    val (gb, _) = NnGraph.buildShared(cb, s"$dir#mergeB")
+    val (ga, _) = NnGraph.buildShared(ca, dir, "mergeA")
+    val (gb, _) = NnGraph.buildShared(cb, dir, "mergeB")
     val cross = NnGraph.seedGraph(qv).filter(inB(col("src")) =!= inB(col("dst")))
     val xh = NnGraph.score(cross, qv)
     val wSrc = Window.partitionBy("src").orderBy(col("d2"), col("dst"))

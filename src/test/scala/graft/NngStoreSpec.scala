@@ -17,7 +17,7 @@ class NngStoreSpec extends SparkSpec {
     // Independent replay: aggregate the memo-shared build frames
     // directly (plain Dataset ops, not the key's own grouping chain).
     val qv = VectorSearch.int8Grid(spark, sf)
-    val (refined, init) = NnGraph.buildShared(qv, s"$sf#full")
+    val (refined, init) = NnGraph.buildShared(qv, sf, "full")
     val byPart = rows.map(r => r.getString(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val rDeg = refined.groupBy("src").count()
