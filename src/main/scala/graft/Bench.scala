@@ -259,14 +259,29 @@ object Bench {
     // rep's qps rides in "qps_reps" so window noise is visible in the
     // artifact itself.
     val servingReps = sys.env.getOrElse("SPARK_GRAFT_SERVING_REPS", "3").toInt.max(1)
+    def progressJson(ps: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]): String = {
+      def med(key: String): String = {
+        val v = ps.flatMap(p => Option(p.durationMs.get(key))).map(_.longValue).sorted
+        if (v.isEmpty) "null" else v(v.size / 2).toString
+      }
+      val maxState = ps.map(_.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(_ max _)
+      s"""{"batches":${ps.size},"max_state_rows":$maxState,""" +
+        s""""wal_commit_ms":${med("walCommit")},"add_batch_ms":${med("addBatch")},""" +
+        s""""commit_offsets_ms":${med("commitOffsets")}}"""
+    }
     def rateBlock(name: String,
         run: (SparkSession, String, Int, Int) => Seq[Double]): String =
       if (sys.env.get("SPARK_GRAFT_BENCH_SERVING").contains("0")) "null"
       else try {
         val nBatches = 8
         val batchSize = 64
+        // Streaming progress of the block's micro-batches (ROADMAP aim 4):
+        // peak state rows (0 for a stateless serve) and the median
+        // offset-log / batch / commit-log milliseconds per batch.
+        val tap = new streaming.Streaming.ProgressTap(spark)
         val repLats: Seq[Seq[Double]] =
-          (1 to servingReps).map(_ => run(spark, sfDir, nBatches, batchSize))
+          try (1 to servingReps).map(_ => run(spark, sfDir, nBatches, batchSize))
+          finally tap.close()
         val repQps = repLats.map(l => nBatches.toLong * batchSize / l.sum)
         val medIdx = repQps.zipWithIndex.sortBy(_._1).apply(repQps.size / 2)._2
         val lats = repLats(medIdx)
@@ -281,7 +296,8 @@ object Bench {
         s"""{"query":${jstr(name)},"n_batches":$nBatches,"batch_size":$batchSize,""" +
           s""""p50_s":${f4(p50)},"p95_s":${f4(p95)},"qps":${f1(qps)},""" +
           s""""qps_reps":[${repQps.map(f1).mkString(",")}],""" +
-          s""""lat_s":[${lats.map(f4).mkString(",")}]}"""
+          s""""lat_s":[${lats.map(f4).mkString(",")}],""" +
+          s""""progress":${progressJson(tap.progress)}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] serving harness $name failed: ${e.getMessage}")
         "null"

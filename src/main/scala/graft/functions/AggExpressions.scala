@@ -494,12 +494,13 @@ case class MisraGries(child: Expression, k: Int,
 /** Bounded top-k-nearest aggregate: keeps the k smallest (d2, id) pairs
   * (lexicographic — d2 first, id breaks ties, so the result is the
   * EXACT `row_number() OVER (ORDER BY d2, id) <= k` set) in one max-heap
-  * buffer of ≤ k pairs per group. This is THE serving aggregate for an
-  * always-on search stream ([[graft.streaming.Streaming.vsSearchStream]]):
-  * per-group state is k pairs no matter how many corpus candidates flow
-  * through, it map-side combines, and merges are heap unions — so a
-  * streaming groupBy(q_id) over an unbounded candidate stream carries
-  * 16·k bytes of state per in-flight query, never a window sort.
+  * buffer of ≤ k pairs per group. This is THE serving cut of every
+  * search serve ([[graft.streaming.Streaming.vsSearchStream]] and its
+  * indexed siblings): the buffer is k pairs no matter how many corpus
+  * candidates flow through, it map-side combines, and merges are heap
+  * unions — a groupBy(q_id) over a micro-batch's candidates is 16·k
+  * bytes per query, never a window sort. The serves cut each query
+  * inside its own micro-batch, so no buffer outlives the batch.
   * Emits array<struct<d2, c_id>> sorted ascending (rank order). */
 case class TopKMinPairs(left: Expression, right: Expression, k: Int,
     distinct: Boolean = false,

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.Streaming
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the pruned-LSH serving crossover the r18 verdict demanded
@@ -20,8 +21,8 @@ import org.apache.spark.sql.functions._
   *      vs_lsh_upsert's append path freezes it (new data hashes onto
   *      stored planes; it never reshapes them);
   *   3. serves identical 64-query micro-batches in COLD mode (the
-  *      declarative stream-static single plan: full band-table scan
-  *      per batch) and PRUNED mode (per-batch probe-set pushback,
+  *      single-plan serve: full band-table scan per batch) and
+  *      PRUNED mode (per-batch probe-set pushback,
   *      bucket-FILE pruning) through the exact production chains
   *      ([[graft.streaming.Streaming.lshServeChain]] /
   *      [[graft.streaming.Streaming.lshPrunedChain]]);
@@ -78,8 +79,6 @@ object ServeCrossover {
 
     val nBatches = 8
     val batchSize = 64
-    val pool = emb.orderBy("vec_id").limit((nBatches + 1) * batchSize)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
 
     /** Store band/vecs tables for `tag` at geometry (r, b); returns the
       * band-row count. Identical artifact shape to ensureLshStored
@@ -100,50 +99,23 @@ object ServeCrossover {
 
     def rate(lats: Seq[Double]): Double = nBatches.toLong * batchSize / lats.sum
 
-    /** Cold serve: the declarative stream-static single plan over the
-      * stored tables at (r, b) — [[Streaming.lshServeChain]] verbatim. */
+    /** Cold serve: the single-plan serve over the stored tables at
+      * (r, b) — [[Streaming.lshServeChain]] verbatim, per micro-batch. */
     def coldMode(tag: String, flat: Array[Double], r: Int, b: Int): Seq[Double] = {
       val bands = graft.util.Persist.stage(
         spark.table(graft.ops.VectorSearch.storedTable("graft_lsh_bands", s"$work#$tag")),
         eager = false)
       val corpus =
         spark.table(graft.ops.VectorSearch.storedTable("graft_lsh_vecs", s"$work#$tag"))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-      val out = graft.streaming.Streaming.lshServeChain(
-        ms.toDF().toDF("q_id", "qv"), flat, r, b, bands, corpus)
-      val q = out.writeStream.format("noop").outputMode("update").start()
-      try {
-        (0 to nBatches).map { batch =>
-          val slice = pool.slice(batch * batchSize, (batch + 1) * batchSize)
-          val t0 = System.nanoTime()
-          ms.addData(slice.toIndexedSeq)
-          q.processAllAvailable()
-          (System.nanoTime() - t0) / 1e9
-        }.drop(1)
-      } finally q.stop()
+      Streaming.serveRate(spark, work, nBatches, batchSize)(q =>
+        Streaming.lshServeChain(Streaming.lshQueries(q), flat, r, b, bands, corpus))
     }
 
     /** Pruned serve: per-batch probe pushback through
       * [[Streaming.lshPrunedChain]] against the same stored tables. */
-    def prunedMode(tag: String, flat: Array[Double], r: Int, b: Int): Seq[Double] = {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-      val q = ms.toDF().toDF("q_id", "qv").writeStream
-        .foreachBatch((bdf: DataFrame, _: Long) =>
-          graft.streaming.Streaming.lshPrunedChain(spark, s"$work#$tag", flat, r, b)(bdf)
-            .write.format("noop").mode("overwrite").save())
-        .start()
-      try {
-        (0 to nBatches).map { batch =>
-          val slice = pool.slice(batch * batchSize, (batch + 1) * batchSize)
-          val t0 = System.nanoTime()
-          ms.addData(slice.toIndexedSeq)
-          q.processAllAvailable()
-          (System.nanoTime() - t0) / 1e9
-        }.drop(1)
-      } finally q.stop()
-    }
+    def prunedMode(tag: String, flat: Array[Double], r: Int, b: Int): Seq[Double] =
+      Streaming.serveRate(spark, work, nBatches, batchSize)(q =>
+        Streaming.lshPrunedChain(spark, s"$work#$tag", flat, r, b)(Streaming.lshQueries(q)))
 
     import graft.util.Jnum.{f1, f4}
     def armJson(tag: String, r: Int, b: Int): (String, Double, Double) = {
@@ -174,8 +146,8 @@ object ServeCrossover {
 
     // IVF pair on the same 150k corpus — the first >sf1 serving point
     // for the IVF family (stored artifacts built by ensureIvfStored).
-    val ivfCold = graft.streaming.Streaming.serveIvfRate(spark, work, nBatches, batchSize)
-    val ivfPruned = graft.streaming.Streaming.serveIvfRatePruned(spark, work, nBatches, batchSize)
+    val ivfCold = Streaming.serveIvfRate(spark, work, nBatches, batchSize)
+    val ivfPruned = Streaming.serveIvfRatePruned(spark, work, nBatches, batchSize)
     println(f"CROSSOVER ivf coldQps=${rate(ivfCold)}%.1f prunedQps=${rate(ivfPruned)}%.1f")
     val ivfJson =
       s"""{"cold_qps":${f1(rate(ivfCold))},"pruned_qps":${f1(rate(ivfPruned))},""" +

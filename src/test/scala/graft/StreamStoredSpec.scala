@@ -36,20 +36,16 @@ class StreamStoredSpec extends SparkSpec {
   test("cold session: the STREAM leg over the stored index ≡ its batch twin") {
     SparkEntry.queries("vs_ivf_store")(spark, sf).collect()
     val cold = spark.newSession()
-    val q = Streaming.vsSearchStoredStream(cold, sf).writeStream
-      .format("memory").queryName("stream_stored")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    val q = Streaming.vsSearchStoredStream(cold, sf,
+      df => got.synchronized { got ++= Streaming.ranked(df).collect().map(key) })
     q.awaitTermination(120000)
-    val streamed = cold.table("stream_stored")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "hit")))
-      .select(col("q_id"), (col("pos") + 1L).as("rank"),
-        col("hit.c_id"), col("hit.d2"))
-      .collect().map(key).toSet
+    val streamed = got.toSet
     val batch = SparkEntry.queries("stream_search_stored")(cold, sf)
       .collect().map(key).toSet
     assert(streamed.nonEmpty && streamed == batch,
       "stored-index streaming serve diverged from its batch twin")
+    assert(q.recentProgress.nonEmpty && q.recentProgress.forall(_.stateOperators.isEmpty),
+      "search serve must run with zero state-store operators")
   }
 }
