@@ -90,11 +90,48 @@ object IvfIndex {
   def intD2(q: Column, c: IndexedSeq[Long]): Column =
     graft.functions.int_sq_l2(q, typedlit(c))
 
-  /** Nearest-centroid cell id under integer L2, ties to the smaller cid. */
-  def intCellOf(q: Column, model: IntModel): Column =
+  /** The ONE int8 grid: every coordinate of `v` scaled by 127/`maxAbs`
+    * and rounded half away from zero — the full corpus, a base slice,
+    * IVF-PQ residuals and a stream's queries (against a driver-scalar
+    * `lit(maxAbs)`) all quantize through here. */
+  def quantize(v: Column, maxAbs: Column): Column =
+    transform(v, x => round(x * lit(127.0) / maxAbs, 0).cast("long"))
+  /** SQL twin of [[quantize]] (DuckDB `round` also rounds half away
+    * from zero). */
+  def quantizeSql(v: String, maxAbs: String): String =
+    s"list_transform($v, x -> CAST(round((x * 127.0) / $maxAbs) AS BIGINT))"
+  /** Driver-side twin of [[quantize]] for one value (`math.round`). */
+  def quantizeValue(x: Double, maxAbs: Double): Long = math.round(x * 127.0 / maxAbs)
+  /** The grid scale of a vector column: max |coordinate| (an aggregate). */
+  def maxAbs(v: Column): Column = max(array_max(transform(v, x => abs(x))))
+
+  /** Cell count and Lloyd rounds of every trained IVF in graft. */
+  final val Cells = 8
+  final val Iters = 2
+
+  /** Nearest centroid of the int8 vector `q` as a (d2, cid) struct —
+    * integer L2, ties to the smaller cid. */
+  def intCellD2(q: Column, model: IntModel): Column =
     least(model.centroids.map { case (cid, cv) =>
       struct(intD2(q, cv).as("d2"), lit(cid).as("cid"))
-    }: _*).getField("cid")
+    }: _*)
+
+  /** Nearest-centroid cell id under integer L2, ties to the smaller cid. */
+  def intCellOf(q: Column, model: IntModel): Column =
+    intCellD2(q, model).getField("cid")
+
+  /** The `nprobe` cells nearest to `q` as an ascending array of (d2, cid)
+    * structs (ties to the smaller cid). */
+  def probeCells(q: Column, model: IntModel, nprobe: Int): Column =
+    slice(array_sort(array(model.centroids.map { case (cid, cv) =>
+      struct(intD2(q, cv).as("d2"), lit(cid).as("cid"))
+    }: _*)), 1, nprobe)
+
+  /** Every column of `queries` plus `cell`: one row per probed cell of
+    * the query vector column `q`. */
+  def probe(queries: DataFrame, q: String, model: IntModel, nprobe: Int): DataFrame =
+    queries.select(col("*"), explode(probeCells(col(q), model, nprobe)).as("p"))
+      .select((queries.columns.toSeq.map(c => col(s"`$c`")) :+ col("p.cid").as("cell")): _*)
 
   /** The k seed rows under the hash-coin rank (ties by id) — one
     * bounded TakeOrderedAndProject collect, shared by [[fit]] and

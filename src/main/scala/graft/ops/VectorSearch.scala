@@ -656,13 +656,7 @@ object VectorSearch {
     * longs for arithmetic clarity — a production encoder would pack the
     * int8s into binary. */
   def vsQuantSearch: Q = (spark, dir) => {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val mx = e.agg(max(array_max(transform(col("v"), x => abs(x)))).as("maxabs"))
-    val quant = e.crossJoin(broadcast(mx))
-      .select(col("vec_id"),
-        transform(col("v"), x => round(x * lit(127.0) / col("maxabs"), 0).cast("long"))
-          .as("qd"))
+    val quant = int8GridShared(spark, dir)
     val q0 = quant.filter(col("vec_id") === 0).select(col("qd").as("qv"))
     quant.crossJoin(broadcast(q0))
       .select(col("vec_id"),
@@ -670,12 +664,7 @@ object VectorSearch {
       .orderBy(col("qdot").desc, col("vec_id"))
       .limit(10)
   }
-  val vsQuantSearchSql: String = s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    quant AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS qd
-      FROM e, mx),
+  val vsQuantSearchSql: String = int8GridCtes + """,
     q0 AS (SELECT qd AS qv FROM quant WHERE vec_id = 0)
     SELECT vec_id,
       CAST(list_sum(list_transform(range(1, len(qd)+1), i -> qd[i] * qv[i])) AS BIGINT)
@@ -711,20 +700,13 @@ object VectorSearch {
     * map-only over one scan, and the top-k is a TakeOrdered reduction —
     * no corpus shuffle anywhere. All arithmetic is integer, so the SQL
     * oracle matches bit-for-bit including the emitted code strings. */
-  /** (vec_id, qd) int8 grid of the corpus — the ONE definition of the
-    * quantization shared by [[pqAdcFrames]] and [[vsMaxsimSearch]]
-    * (SQL twin: [[int8GridCtes]]). Generate barrier: encode stages
-    * reference qd many times — without it CollapseProject re-inlines the
-    * quantization transform into every reference. */
   /** The grid scale int8Grid derives (corpus max |coordinate|), as a
     * bounded driver scalar — a streaming leg quantizes incoming query
     * vectors with this literal so its grid is bit-identical to the
     * static corpus grid ([[graft.streaming.Streaming.vsSearchStream]]). */
   private[graft] def gridMaxAbs(spark: SparkSession, dir: String): Double = {
     val row = emb(spark, dir)
-      .select(col("embedding").cast("array<double>").as("v"))
-      .agg(max(array_max(transform(col("v"), x => abs(x)))))
-      .head()
+      .agg(IvfIndex.maxAbs(col("embedding").cast("array<double>"))).head()
     // Loud contract (r12 advice): an empty/all-null table reached
     // head().getDouble as an opaque NPE, and an all-zero corpus made
     // the streaming quantization divide by zero downstream.
@@ -736,23 +718,38 @@ object VectorSearch {
     m
   }
 
-  private[graft] def int8Grid(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val mx = e.agg(max(array_max(transform(col("v"), x => abs(x)))).as("maxabs"))
-    graft.util.Det.materializedColumn(
-      e.crossJoin(broadcast(mx))
-        .select(col("vec_id"),
-          transform(col("v"), x => round(x * lit(127.0) / col("maxabs"), 0).cast("long"))
-            .as("qd_raw")),
-      "qd", col("qd_raw")).select("vec_id", "qd")
+  /** (vec_id, qd) int8 grid of the corpus (SQL twin: [[int8GridCtes]]).
+    * Generate barrier: encode stages reference qd many times — without it
+    * CollapseProject re-inlines the quantization transform into every
+    * reference. */
+  private[graft] def int8Grid(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Det.materializedColumn(gridOf(emb(spark, dir), lit(true)), "qd", col("qd_raw"))
+      .select("vec_id", "qd")
+
+  /** The ONE staged full-corpus int8 grid (vec_id, qd) per (session,
+    * dir), read by the graph, IVF, PQ, sparse, MaxSim, MMR and planner
+    * keys and the streaming serve twins. */
+  private[graft] def int8GridShared(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Staged.get(spark, "vs.int8Grid", dir)(
+      graft.util.Persist.stage(int8Grid(spark, dir), eager = false))
+
+  /** (vec_id, qd_raw): the (vec_id, embedding) rows of `e` on the int8
+    * grid scaled by the rows passing `scaleRows` (the whole corpus, or a
+    * frozen base slice). */
+  private def gridOf(e: DataFrame, scaleRows: Column): DataFrame = {
+    val v = e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    v.crossJoin(broadcast(v.filter(scaleRows).agg(IvfIndex.maxAbs(col("v")).as("maxabs"))))
+      .select(col("vec_id"), IvfIndex.quantize(col("v"), col("maxabs")).as("qd_raw"))
   }
-  private[graft] val int8GridCtes: String = s"""
+
+  /** SQL twin of [[int8Grid]]: CTEs `e` (vec_id, v), `mx` (maxabs of the
+    * rows of `e` passing `scaleWhere`) and `quant` (vec_id, qd). */
+  private[graft] def int8GridCtesScaledBy(scaleWhere: String): String = s"""
     WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    quant AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS qd
-      FROM e, mx)"""
+    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs
+      FROM e WHERE $scaleWhere),
+    quant AS (SELECT vec_id, ${IvfIndex.quantizeSql("v", "maxabs")} AS qd FROM e, mx)"""
+  private[graft] def int8GridCtes: String = int8GridCtesScaledBy("true")
 
   /** Shared PQ encode pipeline — returns (quantized corpus frame,
     * per-vector (vec_id, code, adist) ADC frame, query grid vector).
@@ -967,12 +964,11 @@ object VectorSearch {
       "r", zip_with(col("v"), element_at(centsLit, col("cell").cast("int") + 1),
         (a, b) => a - b))
       .select(col("vec_id"), col("cell"), col("r"))
-    val mx = assigned.agg(max(array_max(transform(col("r"), x => abs(x)))).as("maxabs"))
+    val mx = assigned.agg(IvfIndex.maxAbs(col("r")).as("maxabs"))
     val quant = graft.util.Det.materializedColumn(
       assigned.crossJoin(broadcast(mx))
         .select(col("vec_id"), col("cell"),
-          transform(col("r"), x => round(x * lit(127.0) / col("maxabs"), 0).cast("long"))
-            .as("qr_raw")),
+          IvfIndex.quantize(col("r"), col("maxabs")).as("qr_raw")),
       "qr", col("qr_raw")).select("vec_id", "cell", "qr")
     // PQ codebook over RESIDUAL space: quantized residuals of the PqK
     // smallest hash-coin ranks (order-free pick, codebook index = rank),
@@ -1006,9 +1002,8 @@ object VectorSearch {
     val qq: Map[Long, Array[Long]] = qDf.crossJoin(broadcast(mx))
       .select(explode(typedlit(probeCells)).as("cell"), col("v"), col("maxabs"))
       .select(col("cell"),
-        transform(zip_with(col("v"), element_at(centsLit, col("cell").cast("int") + 1),
-          (a, b) => a - b), x => round(x * lit(127.0) / col("maxabs"), 0).cast("long"))
-          .as("qq"))
+        IvfIndex.quantize(zip_with(col("v"), element_at(centsLit, col("cell").cast("int") + 1),
+          (a, b) => a - b), col("maxabs")).as("qq"))
       .collect().map(r => r.getAs[Long]("cell") -> r.getSeq[Long](1).toArray).toMap
     val dtabByCell: Seq[Seq[Seq[Long]]] = probeCells.map { c =>
       (0 until PqM).map(m => (0 until PqK).map { k =>
@@ -1041,8 +1036,7 @@ object VectorSearch {
         list_transform(range(1, ${PqM * PqDsub + 1}), d -> e.v[d] - a.cv[d]) AS r
       FROM assign a JOIN e ON e.vec_id = a.vec_id),
     mx AS (SELECT MAX(list_max(list_transform(r, x -> abs(x)))) AS maxabs FROM res),
-    quant AS (SELECT vec_id, cell,
-        list_transform(r, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS qr
+    quant AS (SELECT vec_id, cell, ${IvfIndex.quantizeSql("r", "maxabs")} AS qr
       FROM res, mx),
     seeds AS (SELECT rn - 1 AS kid, sd FROM (
         SELECT row_number() OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) AS rn,
@@ -1064,9 +1058,8 @@ object VectorSearch {
         SELECT cent.cid, cent.cv,
           row_number() OVER (ORDER BY ${distSql("q.v", "cent.cv")}, cent.cid) AS rn
         FROM q, cent) WHERE rn <= $IvfPqNprobe),
-    qq AS (SELECT p.cid,
-        list_transform(range(1, ${PqM * PqDsub + 1}),
-          d -> CAST(round(((q.v[d] - p.cv[d]) * 127.0) / maxabs) AS BIGINT)) AS qq
+    qq AS (SELECT p.cid, ${IvfIndex.quantizeSql(
+        s"list_transform(range(1, ${PqM * PqDsub + 1}), d -> q.v[d] - p.cv[d])", "maxabs")} AS qq
       FROM q, probe p, mx),
     dtab AS (SELECT qq.cid, s.m, sd.kid,
         CAST(list_sum(list_transform(range(1, ${PqDsub + 1}), d ->
@@ -1093,11 +1086,12 @@ object VectorSearch {
   final val IvfTrainedRecallFloorPpm = 600000L
 
   /** End-to-end trained IVF, fully SQL-oracle-able: the trainer is
-    * [[IvfIndex.fitInt]] — integer Lloyd (k=8, 2 rounds, deterministic
-    * hash-coin-seeded init) on the int8 quantization grid, where every assignment
-    * (integer L2, ties to smaller cid) and every centroid update (BIGINT
-    * sum/count, fixed round-half-up division) is exact arithmetic the
-    * DuckDB oracle replays with unrolled per-iteration CTEs (the
+    * [[IvfIndex.fitInt]] — integer Lloyd ([[IvfIndex.Cells]] cells,
+    * [[IvfIndex.Iters]] rounds, deterministic hash-coin-seeded init) on
+    * the int8 quantization grid, where every assignment (integer L2, ties
+    * to smaller cid) and every centroid update (BIGINT sum/count, fixed
+    * round-half-up division) is exact arithmetic the DuckDB oracle
+    * replays with unrolled per-iteration CTEs ([[ivfTrainSql]], the
     * graph_pagerank technique). The probe is the nprobe=3 integer-L2 cell
     * join; candidates rerank by exact float cosine (r6, ties by id).
     * Output grades the trained index against the exact brute-force top-5 —
@@ -1111,206 +1105,221 @@ object VectorSearch {
     * integer-L2 ordering tracks cosine ordering, so the grid changes the
     * geometry only by quantization error. */
   def vsIvfTrained: Q = (spark, dir) => {
-    val (qv, model) = ivfTrainedModel(spark, dir)
-    val assigned = qv.select(col("vec_id").as("c_id"),
-      IvfIndex.intCellOf(col("q"), model).as("cell"))
-    ivfTrainedGrade(spark, dir, qv, model, assigned)
+    val (model, assigned) = ivfTrained(spark, dir)
+    ivfTrainedGrade(spark, dir, model, assigned)
   }
 
-  // ── IVF shared trained-model memo (r19 optimization round: every
-  //    full-corpus lifecycle key — vs_ivf_trained, vs_ivf_delete, the
-  //    store/vacuum ensure-paths — re-ran the integer-Lloyd trainer and
-  //    re-staged the quantized grid on EVERY evaluation, and
-  //    vs_ivf_upsert + vs_ivf_retrain trained the IDENTICAL frozen
-  //    base-slice model twice per sweep. Same plan-level-reuse posture
-  //    as [[NnGraph.buildShared]] / [[nngQv]]: the trainer is
-  //    deterministic (integer arithmetic, hash-coin init — IvfSpec pins
-  //    it), so the memoized (grid, model) pair is content-identical to
-  //    a fresh train and every oracle hash is unchanged; only repeated
-  //    construction work is skipped (in a deployment the trained
-  //    centroids ARE the stored index artifact, computed once). Staged
-  //    through [[graft.util.Staged]] like every shared artifact. ─────────
-  private def ivfModelShared(spark: SparkSession, dir: String, tag: String)(
-      build: => (DataFrame, IvfIndex.IntModel)): (DataFrame, IvfIndex.IntModel) =
-    graft.util.Staged.get(spark, s"vs.ivfModel:$tag", dir)(build)
-
-  /** The trainer half of [[vsIvfTrained]]: staged int8-grid quantized
-    * corpus (column `q`) + the integer-Lloyd model. Shared with the
-    * store/load lifecycle so the persisted index is THE trained one.
-    * Memoized per (session, dir) — see [[ivfModelShared]]. */
-  private def ivfTrainedModel(spark: SparkSession, dir: String)
-      : (DataFrame, IvfIndex.IntModel) = ivfModelShared(spark, dir, "full") {
-    val e = emb(spark, dir)
-    val mx = e.agg(max(array_max(transform(col("embedding"), x => abs(x)))).as("maxabs"))
-    // (vec_id, q): int8-grid quantization, same arithmetic as vs_quant_search.
-    // Staged once — the trainer's per-round jobs, the final assignment and
-    // the probe all reuse it (Persist.stage survives executor loss).
-    val qv = graft.util.Persist.stage(
-      e.crossJoin(broadcast(mx)).select(col("vec_id"),
-        transform(col("embedding"), x =>
-          round(x * lit(127.0) / col("maxabs"), 0).cast("long")).as("q")))
-    (qv, IvfIndex.fitInt(qv, "vec_id", "q", k = 8, iters = 2))
-  }
+  /** The trained IVF: [[IvfIndex.fitInt]] over the shared int8 grid and
+    * its staged (c_id, cell, qd) assignment — the index artifact
+    * [[vsIvfStore]] persists. ONE Staged entry per (session, dir), read by
+    * vs_ivf_trained, vs_ivf_store, vs_ivf_delete, vs_index_vacuum,
+    * stream_search_ivf and the planner's IVF arm, so the model is trained
+    * once per session. The trainer is deterministic (integer arithmetic,
+    * hash-coin init — IvfSpec pins it), so every consumer sees what a
+    * fresh train would give. Callers that need the grid itself fetch it
+    * through [[int8GridShared]]: a value holds only frames its own build
+    * staged. */
+  private[graft] def ivfTrained(spark: SparkSession, dir: String)
+      : (IvfIndex.IntModel, DataFrame) =
+    graft.util.Staged.get(spark, "vs.ivfTrained", dir) {
+      val grid = int8GridShared(spark, dir)
+      val model = IvfIndex.fitInt(grid, "vec_id", "qd", IvfIndex.Cells, IvfIndex.Iters)
+      (model, graft.util.Persist.stage(grid.select(col("vec_id").as("c_id"),
+        IvfIndex.intCellOf(col("qd"), model).as("cell"), col("qd"))))
+    }
 
   /** Frozen-index trainer shared by [[vsIvfUpsert]] and
-    * [[ivfRetrainWith]]: the FULL corpus quantized on the BASE grid
-    * (maxabs from the base slice — the frozen index artifact; new data
-    * quantizes onto it, never reshapes it) plus the integer-Lloyd model
-    * trained on the base slice only. Both keys spell exactly this pair
-    * (upsert inline, retrain via quant(baseF) — float→double widening
-    * is exact, so the quantized values are bit-identical), so the memo
-    * returns the same frames a fresh build would. */
+    * [[ivfRetrainWith]]: the FULL corpus (vec_id, qd) on the BASE grid
+    * (scale from the base slice — the frozen index artifact; new data
+    * quantizes onto it, never reshapes it), staged, plus the model
+    * trained on the base slice only. */
   private[graft] def ivfBaseGridModel(spark: SparkSession, dir: String)
-      : (DataFrame, IvfIndex.IntModel) = ivfModelShared(spark, dir, "base50") {
-    val e = emb(spark, dir)
-    val isNew = col("vec_id") % UpsertMod === 0
-    val mx = e.filter(!isNew)
-      .agg(max(array_max(transform(col("embedding"), x => abs(x)))).as("maxabs"))
-    val qAll = graft.util.Persist.stage(
-      e.crossJoin(broadcast(mx)).select(col("vec_id"),
-        transform(col("embedding"), x =>
-          round(x * lit(127.0) / col("maxabs"), 0).cast("long")).as("q")))
-    (qAll, IvfIndex.fitInt(qAll.filter(!isNew), "vec_id", "q", k = 8, iters = 2))
-  }
-
-  /** The grading half of [[vsIvfTrained]]: nprobe cell pick from the
-    * model's broadcast centroid literals, exact-cosine rerank, recall@5
-    * vs brute force. `assigned` is the (c_id, cell) index table — the
-    * trained key passes the freshly-assigned frame, [[vsIvfLoad]] the
-    * RELOADED catalog table, and both must grade identically. */
-  private def ivfTrainedGrade(spark: SparkSession, dir: String, qv: DataFrame,
-      model: IvfIndex.IntModel, assigned: DataFrame): DataFrame = {
-    val e = emb(spark, dir)
-    val probeStructs = model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
+      : (DataFrame, IvfIndex.IntModel) =
+    graft.util.Staged.get(spark, "vs.ivfModel:base50", dir) {
+      val isBase = col("vec_id") % UpsertMod =!= 0
+      val grid = graft.util.Persist.stage(
+        gridOf(emb(spark, dir), isBase).withColumnRenamed("qd_raw", "qd"))
+      (grid, IvfIndex.fitInt(grid.filter(isBase), "vec_id", "qd",
+        IvfIndex.Cells, IvfIndex.Iters))
     }
-    val probes = qv.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"))
-      .select(col("q_id"),
-        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("cell"))
-    val qraw = e.filter(col("vec_id") % 100 === 0)
+
+  /** The IVF family's recall@5 grade, one (q_id, n_exact, n_hits) row per
+    * query. The queries are the rows whose vec_id passes `isQuery`: their
+    * `grid` vectors (vec_id, qd) probe the `nprobe` nearest cells of
+    * `model`, the probed cells' members in `assigned` (c_id, cell) rerank
+    * by exact cosine against `corpus` (vec_id, embedding), and the top-5
+    * is graded against the exact top-5 over `corpus` (self included on
+    * both arms). */
+  private def ivfRecall(corpus: DataFrame, grid: DataFrame, model: IvfIndex.IntModel,
+      assigned: DataFrame, isQuery: Column => Column, nprobe: Int): DataFrame = {
+    val probes = IvfIndex.probe(grid.filter(isQuery(col("vec_id")))
+        .select(col("vec_id").as("q_id"), col("qd")), "qd", model, nprobe)
+      .select("q_id", "cell")
+    val qraw = corpus.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val w = Window.partitionBy("q_id").orderBy(col("dist").asc_nulls_last, col("c_id"))
-    val approx = assigned.join(broadcast(probes), "cell")
-      .join(e.withColumnRenamed("vec_id", "c_id"), "c_id")
+    def top5(scored: DataFrame): DataFrame =
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+        .select("q_id", "c_id")
+    val approx = top5(assigned.select("c_id", "cell").join(broadcast(probes), "cell")
+      .join(corpus.withColumnRenamed("vec_id", "c_id"), "c_id")
       .join(broadcast(qraw), "q_id")
-      .select(col("q_id"), col("c_id"), dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val exact = e.crossJoin(broadcast(qraw))
+      .select(col("q_id"), col("c_id"), dist(col("embedding"), col("qv")).as("dist")))
+    val exact = top5(corpus.crossJoin(broadcast(qraw))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    // |Q| rows — materialize so the mean-recall aggregate below and the
-    // returned frame share one evaluation of the probe + exact pipelines.
-    val graded = graft.util.Persist.stage(
-      exact.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0L))).as("n_hits")))
-    val tot = graded.agg(sum("n_hits"), sum("n_exact")).head()
-    require(!tot.isNullAt(1) && tot.getLong(1) > 0,
-      "trained IVF has no queries to grade (empty query set)")
-    val ppm = 1000000L * tot.getLong(0) / tot.getLong(1)
-    graded.select(col("q_id"), col("n_exact"), col("n_hits"),
-        r6(col("n_hits") / col("n_exact")).as("recall"))
-      .withColumn("mean_recall_ppm", lit(ppm))
-      .withColumn("below_floor",
-        lit(if (ppm < IvfTrainedRecallFloorPpm) 1L else 0L))
-      .orderBy("q_id")
+        dist(col("embedding"), col("qv")).as("dist")))
+    exact.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
+      .groupBy("q_id")
+      .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
   }
 
-  /** Full SQL replay of [[vsIvfTrained]]: quantize → unrolled integer
-    * Lloyd (init c0 = the 8 grid vectors of smallest hash-coin rank; per round: integer-L2 argmin
-    * assignment, BIGINT per-(cell,dim) sums, round-half-up centroid
-    * update with empty cells keeping their centroid) → final assignment →
-    * nprobe=3 probe → exact-cosine rerank → recall grade. Every centroid
-    * coordinate and distance is integer arithmetic; the only floats are
-    * the shared round-6 cosine rerank and the single recall division. */
-  /** One integer-Lloyd round as CTE text: assignment of the rows of CTE
-    * `src` from centroid set `cin`, round-half-up update into centroid
-    * set `cout` (suffix `i` keeps CTE names unique). Shared by the
-    * [[vsIvfTrainedSql]] (src = the full quantized corpus) and
-    * [[vsIvfUpsertSql]] (src = the base slice only) oracles. */
-  private def ivfLloydRoundSql(i: Int, cin: String, cout: String, src: String) = s"""
-    d$i AS (SELECT t.vec_id, t.q, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM $src t, $cin c),
-    a$i AS (SELECT vec_id, q, cid FROM (
-        SELECT vec_id, q, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM d$i)
-      WHERE rn = 1),
-    s$i AS (SELECT cid, dd.d AS dim, CAST(SUM(q[dd.d]) AS BIGINT) AS s, COUNT(*) AS n
-      FROM a$i, (SELECT unnest(range(1, 65)) AS d) dd GROUP BY cid, dd.d),
-    u$i AS (SELECT cid,
-        list((2 * (s + 127 * n) + n) // (2 * n) - 127 ORDER BY dim) AS c
-      FROM s$i GROUP BY cid),
-    $cout AS (SELECT $cin.cid, COALESCE(u$i.c, $cin.c) AS c
-      FROM $cin LEFT JOIN u$i ON $cin.cid = u$i.cid)"""
+  /** Mean recall of an [[ivfRecall]] grade in exact integer ppm
+    * (1e6·Σhits/Σexact); `what` names the index in the empty-grade error. */
+  private def recallPpm(graded: DataFrame, what: String): Long = {
+    val tot = graded.agg(sum("n_hits"), sum("n_exact")).head()
+    require(!tot.isNullAt(1) && tot.getLong(1) > 0, s"$what has no queries to grade")
+    1000000L * tot.getLong(0) / tot.getLong(1)
+  }
 
-  val vsIvfTrainedSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qv")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    c0 AS (SELECT CAST(row_number()
+  /** `report` with the mean recall and its floor flag on every row. */
+  private def withRecall(report: DataFrame, ppm: Long, floorPpm: Long): DataFrame =
+    report.withColumn("mean_recall_ppm", lit(ppm))
+      .withColumn("below_floor", lit(if (ppm < floorPpm) 1L else 0L))
+
+  /** One row per centroid of `model` — (cell, centroid_norm2) plus, per
+    * named (c_id, cell) frame, its member count in that cell (0 when
+    * empty): the per-cell report of the delete and merge legs. */
+  private def cellCounts(spark: SparkSession, model: IvfIndex.IntModel,
+      members: (String, DataFrame)*): DataFrame = {
+    val sess = spark
+    import sess.implicits._
+    val cents = model.centroids.map { case (cid, cv) =>
+      (cid.toLong, cv.map(x => x * x).sum) }.toDF("cell", "centroid_norm2")
+    members.foldLeft(cents) { case (acc, (name, a)) =>
+      acc.join(a.groupBy("cell").agg(count(lit(1)).as(name))
+          .select(col("cell").cast("long").as("cell"), col(name)), Seq("cell"), "left")
+        .withColumn(name, coalesce(col(name), lit(0L)))
+    }
+  }
+
+  /** The grading half of [[vsIvfTrained]]: [[ivfRecall]] over the query
+    * slice vec_id % 100 = 0. `assigned` is the (c_id, cell) index table —
+    * the trained key passes the staged assignment, [[vsIvfLoad]] the
+    * RELOADED catalog table, and both must grade identically. */
+  private def ivfTrainedGrade(spark: SparkSession, dir: String,
+      model: IvfIndex.IntModel, assigned: DataFrame): DataFrame = {
+    // |Q| rows — staged so the mean recall and the returned frame share
+    // one evaluation of the probe + exact pipelines.
+    val graded = graft.util.Persist.stage(ivfRecall(emb(spark, dir),
+      int8GridShared(spark, dir), model, assigned, _ % 100 === 0, IvfTrainedNprobe))
+    withRecall(graded.select(col("q_id"), col("n_exact"), col("n_hits"),
+        r6(col("n_hits") / col("n_exact")).as("recall")),
+      recallPpm(graded, "trained IVF"), IvfTrainedRecallFloorPpm).orderBy("q_id")
+  }
+
+  /** SQL twin of [[IvfIndex.fitInt]], the ONE trainer-CTE builder: the
+    * seed `<p>c0` — the [[IvfIndex.Cells]] rows of CTE `src` (vec_id, qd)
+    * of smallest hash-coin rank, ties by id — then [[IvfIndex.Iters]]
+    * unrolled integer-Lloyd rounds (integer-L2 argmin assignment, BIGINT
+    * per-(cell, dim) sums, round-half-up update, empty cells keep their
+    * centroid), ending in `<p>cents` (cid, c). `p` prefixes every CTE so
+    * two trainers coexist in one query. */
+  private def ivfTrainSql(src: String, p: String = ""): String = {
+    val seed = s"""
+    ${p}c0 AS (SELECT CAST(row_number()
           OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    df AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM df)
-      WHERE rn = 1),
-    qs AS (SELECT vec_id AS q_id, q FROM qv WHERE vec_id % 100 = 0),
-    pd AS (SELECT t.q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qs t, c2 c),
-    probe AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd)
-      WHERE rn <= $IvfTrainedNprobe),
-    qraw AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 100 = 0),
-    araw AS (SELECT p.q_id, a.c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM probe p JOIN af a ON a.cell = p.cell
-        JOIN e ec ON ec.vec_id = a.c_id
-        JOIN qraw eq ON eq.q_id = p.q_id),
-    approx AS (SELECT q_id, c_id FROM (
+        AS INT) AS cid, qd AS c
+      FROM $src ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id
+      LIMIT ${IvfIndex.Cells})"""
+    def round_(i: Int): String = {
+      val (cin, cout) = (s"${p}c${i - 1}", s"${p}c$i")
+      s"""
+    ${p}a$i AS (SELECT vec_id, qd, cid FROM (
+        SELECT t.vec_id, t.qd, c.cid, row_number() OVER (PARTITION BY t.vec_id
+          ORDER BY ${NngSql.d2Sql("t.qd", "c.c")}, c.cid) AS rn
+        FROM $src t, $cin c) WHERE rn = 1),
+    ${p}s$i AS (SELECT cid, dd.d AS dim, CAST(SUM(qd[dd.d]) AS BIGINT) AS s, COUNT(*) AS n
+      FROM ${p}a$i, (SELECT unnest(range(1, 65)) AS d) dd GROUP BY cid, dd.d),
+    ${p}u$i AS (SELECT cid,
+        list((2 * (s + 127 * n) + n) // (2 * n) - 127 ORDER BY dim) AS c
+      FROM ${p}s$i GROUP BY cid),
+    $cout AS (SELECT $cin.cid, COALESCE(${p}u$i.c, $cin.c) AS c
+      FROM $cin LEFT JOIN ${p}u$i ON $cin.cid = ${p}u$i.cid)"""
+    }
+    (seed +: (1 to IvfIndex.Iters).map(round_)).mkString(",") + s""",
+    ${p}cents AS (SELECT cid, c FROM ${p}c${IvfIndex.Iters})"""
+  }
+
+  /** SQL twin of [[IvfIndex.intCellD2]]: CTE `out` (c_id, cell, d2) —
+    * every row of `src` (vec_id, qd) on its nearest centroid of `cs`. */
+  private def ivfAssignSql(out: String, src: String, cs: String = "cents"): String = s"""
+    $out AS (SELECT vec_id AS c_id, cid AS cell, d2 FROM (
+        SELECT vec_id, cid, d2,
+          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+        FROM (SELECT t.vec_id, c.cid, ${NngSql.d2Sql("t.qd", "c.c")} AS d2
+          FROM $src t, $cs c))
+      WHERE rn = 1)"""
+
+  /** SQL twin of [[IvfIndex.probe]]: CTE `out` (q_id, cell) — the
+    * `nprobe` centroids of `cs` nearest each query (q_id, qq) of `qs`. */
+  private[graft] def ivfProbeSql(out: String, qs: String, nprobe: Int,
+      cs: String = "cents"): String = s"""
+    $out AS (SELECT q_id, cell FROM (
+        SELECT q_id, cell,
+          row_number() OVER (PARTITION BY q_id ORDER BY d2, cell) AS rn
+        FROM (SELECT q.q_id, c.cid AS cell, ${NngSql.d2Sql("q.qq", "c.c")} AS d2
+          FROM $qs q, $cs c))
+      WHERE rn <= $nprobe)"""
+
+  /** SQL twin of [[ivfRecall]] + [[recallPpm]], the ONE grade-CTE
+    * builder: `<p>hits` (q_id, n_exact, n_hits) and `<p>tot` (ppm) for
+    * the queries whose vec_id passes `isQuery` — their `grid` (vec_id, qd)
+    * rows probed against `cs`, the members of assignment `assign`
+    * (c_id, cell) reranked by exact cosine over `corpus` (vec_id, v). */
+  private def ivfGradeSql(grid: String, corpus: String, assign: String,
+      isQuery: String, nprobe: Int, cs: String = "cents", p: String = ""): String = {
+    def top5(out: String, scored: String): String = s"""
+    $out AS (SELECT q_id, c_id FROM (
         SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM araw)
-      WHERE rn <= 5),
-    eraw AS (SELECT eq.q_id, ec.vec_id AS c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM e ec, qraw eq),
-    exact AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM eraw)
-      WHERE rn <= 5),
-    hits AS (SELECT x.q_id, COUNT(*) AS n_exact,
+          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM $scored)
+      WHERE rn <= 5)"""
+    val probe = ivfProbeSql(s"${p}probe",
+      s"(SELECT vec_id AS q_id, qd AS qq FROM $grid WHERE $isQuery)", nprobe, cs)
+    s"""$probe,
+    ${p}qraw AS (SELECT vec_id AS q_id, v FROM $corpus WHERE $isQuery),
+    ${top5(s"${p}approx", s"""(SELECT pr.q_id, a.c_id, ${distSql("ec.v", "eq.v")} AS dist
+        FROM ${p}probe pr JOIN $assign a ON a.cell = pr.cell
+          JOIN $corpus ec ON ec.vec_id = a.c_id
+          JOIN ${p}qraw eq ON eq.q_id = pr.q_id)""")},
+    ${top5(s"${p}exact", s"""(SELECT eq.q_id, ec.vec_id AS c_id,
+          ${distSql("ec.v", "eq.v")} AS dist
+        FROM $corpus ec, ${p}qraw eq)""")},
+    ${p}hits AS (SELECT x.q_id, COUNT(*) AS n_exact,
         CAST(SUM(CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      FROM exact x LEFT JOIN approx a ON a.q_id = x.q_id AND a.c_id = x.c_id
+      FROM ${p}exact x LEFT JOIN ${p}approx a ON a.q_id = x.q_id AND a.c_id = x.c_id
       GROUP BY x.q_id),
-    tot AS (SELECT CAST((1000000 * SUM(n_hits)) // SUM(n_exact) AS BIGINT) AS ppm
-      FROM hits)
+    ${p}tot AS (SELECT CAST((1000000 * SUM(n_hits)) // SUM(n_exact) AS BIGINT) AS ppm
+      FROM ${p}hits)"""
+  }
+
+  /** SQL twin of [[ivfTrained]]: the int8 grid (`e`, `mx`, `quant`), the
+    * trainer over it (`cents`) and the assignment `af` (c_id, cell, d2). */
+  private[graft] def ivfTrainedCtes: String =
+    int8GridCtes + s""",${ivfTrainSql("quant")},${ivfAssignSql("af", "quant")}"""
+
+  /** Full SQL replay of [[vsIvfTrained]]: quantize → unrolled integer
+    * Lloyd → final assignment → nprobe=3 probe → exact-cosine rerank →
+    * recall grade. Every centroid coordinate and distance is integer
+    * arithmetic; the only floats are the shared round-6 cosine rerank and
+    * the single recall division. */
+  val vsIvfTrainedSql: String = ivfTrainedCtes + s""",
+    ${ivfGradeSql("quant", "e", "af", "vec_id % 100 = 0", IvfTrainedNprobe)}
     SELECT q_id, n_exact, n_hits,
       round(CAST(n_hits AS DOUBLE) / n_exact, 6) AS recall,
       ppm AS mean_recall_ppm,
       CAST(CASE WHEN ppm < $IvfTrainedRecallFloorPpm THEN 1 ELSE 0 END AS BIGINT)
         AS below_floor
     FROM hits, tot ORDER BY q_id"""
-  }
 
   // ── vs_ivf_store / vs_ivf_load — the IVF index as a STORED artifact ──
   /** The IVF half of the stored-index lifecycle (r15 — same posture as
@@ -1345,7 +1354,7 @@ object VectorSearch {
   private[graft] def ensureIvfStored(spark: SparkSession, dir: String): Unit =
     graft.util.Staged.get(spark.sparkContext, "vs.ivfStore", dir) {
       val t = storedTable("graft_ivf_assign", dir)
-      val (qv, model) = ivfTrainedModel(spark, dir)
+      val (model, assigned) = ivfTrained(spark, dir)
       val sess = spark
       import sess.implicits._
       model.centroids.map { case (cid, cv) => (cid, cv.toSeq) }
@@ -1357,11 +1366,18 @@ object VectorSearch {
       // pgvector posture — the indexed table holds the vectors), so a
       // serving cluster rescores candidates from the SAME FileScan it
       // probes, never re-quantizing the corpus.
-      graft.sources.Sinks.writeBucketedAt(
-        qv.select(col("vec_id").as("c_id"),
-          IvfIndex.intCellOf(col("q"), model).as("cell"), col("q").as("qd")),
-        t, "cell", IvfStoreBuckets, s"$ivfStoreRoot/assign-${t.split('_').last}")
+      graft.sources.Sinks.writeBucketedAt(assigned, t, "cell", IvfStoreBuckets,
+        s"$ivfStoreRoot/assign-${t.split('_').last}")
     }
+
+  /** The model the stored centroid table holds — the one decoder of
+    * `graft_ivf_centroids`, shared by [[vsIvfLoad]] and the stored-index
+    * serves. */
+  private[graft] def storedIvfModel(spark: SparkSession, dir: String): IvfIndex.IntModel = {
+    ensureIvfStored(spark, dir)
+    IvfIndex.IntModel(spark.table(storedTable("graft_ivf_centroids", dir)).collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1).toIndexedSeq)).sortBy(_._1).toIndexedSeq)
+  }
 
   def vsIvfStore: Q = (spark, dir) => {
     ensureIvfStored(spark, dir)
@@ -1377,57 +1393,20 @@ object VectorSearch {
       .orderBy("cell")
   }
 
-  /** Manifest oracle: the shared quantize + unrolled-Lloyd CTEs, then
-    * the assignment histogram and the exact centroid norms (the
-    * store/load round-trip is value-preserving). */
-  val vsIvfStoreSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qv")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    df AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM df)
-      WHERE rn = 1),
+  /** Manifest oracle: the trained-IVF CTEs, then the assignment
+    * histogram and the exact centroid norms (the store/load round-trip
+    * is value-preserving). */
+  val vsIvfStoreSql: String = ivfTrainedCtes + """,
     occ AS (SELECT cell, COUNT(*) AS n FROM af GROUP BY 1)
     SELECT CAST(c.cid AS BIGINT) AS cell,
       CAST(COALESCE(o.n, 0) AS BIGINT) AS n_vecs,
       CAST(list_sum(list_transform(c.c, x -> x * x)) AS BIGINT) AS centroid_norm2
-    FROM c2 c LEFT JOIN occ o ON o.cell = c.cid
+    FROM cents c LEFT JOIN occ o ON o.cell = c.cid
     ORDER BY cell"""
-  }
 
-  def vsIvfLoad: Q = (spark, dir) => {
-    ensureIvfStored(spark, dir)
-    val model = IvfIndex.IntModel(
-      spark.table(storedTable("graft_ivf_centroids", dir)).collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).toIndexedSeq))
-        .sortBy(_._1).toIndexedSeq)
-    val assigned = spark.table(storedTable("graft_ivf_assign", dir))
-    // Only the query slice needs re-quantizing — the index side comes
-    // entirely from the stored tables.
-    val e = emb(spark, dir)
-    val mx = e.agg(max(array_max(transform(col("embedding"), x => abs(x)))).as("maxabs"))
-    val qv = graft.util.Persist.stage(
-      e.crossJoin(broadcast(mx)).select(col("vec_id"),
-        transform(col("embedding"), x =>
-          round(x * lit(127.0) / col("maxabs"), 0).cast("long")).as("q")),
-      eager = false)
-    ivfTrainedGrade(spark, dir, qv, model, assigned)
-  }
+  def vsIvfLoad: Q = (spark, dir) =>
+    ivfTrainedGrade(spark, dir, storedIvfModel(spark, dir),
+      spark.table(storedTable("graft_ivf_assign", dir)))
   val vsIvfLoadSql: String = vsIvfTrainedSql
 
   // ── vs_ivf_upsert — IVF append maintenance (assign, no retrain) ──────
@@ -1440,11 +1419,11 @@ object VectorSearch {
     * re-shuffle the whole corpus for a <2% delta (FAISS `add` vs
     * `train`; pgvector ivfflat inserts into existing lists the same
     * way). Every 50th vector is held out as the new batch; the integer
-    * trainer ([[IvfIndex.fitInt]], k=8, 2 rounds) runs on the base 98%
-    * only, ON THE BASE GRID (maxabs from base — the grid is part of the
-    * frozen index artifact; new data quantizes onto it, never reshapes
-    * it). The append itself is ONE map-only assignment pass over the
-    * batch (argmin vs 8 broadcast-literal centroids, stays in codegen).
+    * trainer ([[IvfIndex.fitInt]]) runs on the base 98% only, ON THE
+    * BASE GRID (maxabs from base — the grid is part of the frozen index
+    * artifact; new data quantizes onto it, never reshapes it). The
+    * append itself is ONE map-only assignment pass over the batch
+    * (argmin vs 8 broadcast-literal centroids, stays in codegen).
     *
     * The output is the maintenance report a store would alarm on, one
     * row per appended vector: its cell, that cell's base/new occupancy
@@ -1458,167 +1437,77 @@ object VectorSearch {
     * exact-cosine rerank) vs the exact top-5 over the full corpus —
     * self included on both arms, exactly [[vsIvfTrained]]'s grading
     * convention. All statistics are exact BIGINT (mean recall in ppm),
-    * so the DuckDB oracle replays the trainer (shared
-    * [[ivfLloydRoundSql]] CTEs on the base slice), the append, the
-    * drift arithmetic, and the grade bit-for-bit. */
+    * so the DuckDB oracle replays the trainer (shared [[ivfTrainSql]]
+    * CTEs on the base slice), the append, the drift arithmetic, and the
+    * grade bit-for-bit. */
   final val IvfUpsertNprobe = 3
   final val IvfUpsertRecallFloorPpm = 600000L
   def vsIvfUpsert: Q = (spark, dir) => {
-    val e = emb(spark, dir)
-    // Grid from the BASE corpus only (the frozen index artifact) + the
-    // base-slice trainer — shared with vs_ivf_retrain's before-arm via
-    // [[ivfBaseGridModel]] (identical slice, grid and trainer).
-    val (qAll, model) = ivfBaseGridModel(spark, dir)
-    val qn = qAll.filter(col("vec_id") % 50 === 0)
-    // Assignment with the per-row distance kept (drift needs it).
-    val cellD2 = least(model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("q"), cv).as("d2"), lit(cid).as("cid"))
-    }: _*)
-    // ONE staged assignment pass over the full grid, sliced after —
-    // the old spelling staged base and batch separately (two
-    // checkpoint jobs over the same frame; r19 guide §2.4).
-    val aAll = graft.util.Persist.stage(
-      qAll.select(col("vec_id").as("c_id"),
-        cellD2.getField("cid").as("cell"), cellD2.getField("d2").as("d2")))
-    val aBase = aAll.filter(!(col("c_id") % 50 === 0))
-    val aNew = aAll.filter(col("c_id") % 50 === 0)
-    // Per-cell growth + integer drift (floor-div means; a cell with no
-    // base members reports 0 base rows and drift 0 — nothing to drift
-    // from).
-    val statsB = aBase.groupBy("cell")
+    def isNew(c: Column): Column = c % UpsertMod === 0
+    val (grid, model) = ivfBaseGridModel(spark, dir)
+    // ONE staged assignment pass over the full grid with the per-row
+    // distance kept (drift needs it), sliced after.
+    val cd = IvfIndex.intCellD2(col("qd"), model)
+    val aAll = graft.util.Persist.stage(grid.select(col("vec_id").as("c_id"),
+      cd.getField("cid").as("cell"), cd.getField("d2").as("d2")))
+    val aNew = aAll.filter(isNew(col("c_id")))
+    // Serving grade: the batch probes nprobe cells of the MERGED
+    // (base + batch) assignment.
+    val graded = graft.util.Persist.stage(
+      ivfRecall(emb(spark, dir), grid, model, aAll, isNew, IvfUpsertNprobe))
+    withRecall(aNew.select(col("c_id").as("q_id"), col("cell"))
+        .join(broadcast(cellDrift(aAll.filter(!isNew(col("c_id"))), aNew)), Seq("cell"))
+        .join(graded, Seq("q_id"))
+        .select(col("q_id"), col("cell").cast("long").as("cell"),
+          col("cell_n_base"), col("cell_n_new"), col("drift_ppm"),
+          col("n_exact"), col("n_hits"),
+          r6(col("n_hits") / col("n_exact")).as("recall")),
+      recallPpm(graded, "IVF upsert"), IvfUpsertRecallFloorPpm).orderBy("q_id")
+  }
+
+  /** Per cell of the batch's (cell, d2) rows: base and new occupancy and
+    * the integer drift 1e6 · (mean new d2) / (mean base d2), floor
+    * division; a cell with no base members drifts 0 (nothing to drift
+    * from). Shared by the upsert report and the retrain trigger. */
+  private def cellDrift(base: DataFrame, batch: DataFrame): DataFrame = {
+    val statsB = base.groupBy("cell")
       .agg(count(lit(1)).as("n_base"), sum("d2").as("s_base"))
-    val statsN = aNew.groupBy("cell")
+    val statsN = batch.groupBy("cell")
       .agg(count(lit(1)).as("n_new"), sum("d2").as("s_new"))
-    val cellStats = statsN.join(statsB, Seq("cell"), "left")
+    statsN.join(statsB, Seq("cell"), "left")
       .select(col("cell"), coalesce(col("n_base"), lit(0L)).as("cell_n_base"),
         col("n_new").as("cell_n_new"),
         when(col("n_base").isNull, lit(0L))
           .otherwise(idiv(lit(1000000L) * idiv(col("s_new"), col("n_new")),
             greatest(idiv(col("s_base"), col("n_base")), lit(1L)))).as("drift_ppm"))
-    // Serving grade: probe nprobe cells of the MERGED assignment.
-    val probeStructs = model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-    }
-    val probes = qn.select(col("vec_id").as("q_id"), col("q").as("qq"))
-      .select(col("q_id"),
-        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfUpsertNprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("cell"))
-    val merged = aBase.select("c_id", "cell").unionByName(aNew.select("c_id", "cell"))
-    val qraw = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("q_id").orderBy(col("dist").asc_nulls_last, col("c_id"))
-    val approx = merged.join(broadcast(probes), "cell")
-      .join(e.withColumnRenamed("vec_id", "c_id"), "c_id")
-      .join(broadcast(qraw), "q_id")
-      .select(col("q_id"), col("c_id"), dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val exact = e.crossJoin(broadcast(qraw))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val graded = graft.util.Persist.stage(
-      exact.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0L))).as("n_hits")))
-    val tot = graded.agg(sum("n_hits"), sum("n_exact")).head()
-    require(!tot.isNullAt(1) && tot.getLong(1) > 0,
-      "IVF upsert has no appended vectors to grade (empty batch)")
-    val ppm = 1000000L * tot.getLong(0) / tot.getLong(1)
-    aNew.select(col("c_id").as("q_id"), col("cell"))
-      .join(broadcast(cellStats), Seq("cell"))
-      .join(graded, Seq("q_id"))
-      .select(col("q_id"), col("cell").cast("long").as("cell"),
-        col("cell_n_base"), col("cell_n_new"), col("drift_ppm"),
-        col("n_exact"), col("n_hits"),
-        r6(col("n_hits") / col("n_exact")).as("recall"))
-      .withColumn("mean_recall_ppm", lit(ppm))
-      .withColumn("below_floor",
-        lit(if (ppm < IvfUpsertRecallFloorPpm) 1L else 0L))
-      .orderBy("q_id")
   }
-
-  /** Full SQL replay of [[vsIvfUpsert]]: base-grid quantization →
-    * unrolled integer Lloyd on the BASE slice (shared
-    * [[ivfLloydRoundSql]]) → base + batch assignment with kept d2 →
-    * per-cell growth/drift arithmetic → merged nprobe=3 probe →
-    * exact-cosine rerank → recall grade. */
-  val vsIvfUpsertSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qb")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs
-      FROM e WHERE vec_id % 50 <> 0),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    qb AS (SELECT * FROM qv WHERE vec_id % 50 <> 0),
-    qn AS (SELECT * FROM qv WHERE vec_id % 50 = 0),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qb ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    db AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qb t, c2 c),
-    ab AS (SELECT vec_id AS c_id, cid AS cell, d2 FROM (
-        SELECT vec_id, cid, d2,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM db)
-      WHERE rn = 1),
-    dn AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qn t, c2 c),
-    an AS (SELECT vec_id AS c_id, cid AS cell, d2 FROM (
-        SELECT vec_id, cid, d2,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dn)
-      WHERE rn = 1),
+  /** SQL twin of [[cellDrift]]: CTE `cs` from the (cell, d2) rows of
+    * CTEs `base` and `batch`. */
+  private def cellDriftSql(base: String, batch: String): String = s"""
     sb AS (SELECT cell, COUNT(*) AS n_base, CAST(SUM(d2) AS BIGINT) AS s_base
-      FROM ab GROUP BY 1),
+      FROM $base GROUP BY 1),
     sn AS (SELECT cell, COUNT(*) AS n_new, CAST(SUM(d2) AS BIGINT) AS s_new
-      FROM an GROUP BY 1),
+      FROM $batch GROUP BY 1),
     cs AS (SELECT sn.cell, COALESCE(sb.n_base, 0) AS cell_n_base,
         sn.n_new AS cell_n_new,
         CASE WHEN sb.n_base IS NULL THEN CAST(0 AS BIGINT)
              ELSE CAST((1000000 * (sn.s_new // sn.n_new))
                   // greatest(sb.s_base // sb.n_base, 1) AS BIGINT) END AS drift_ppm
-      FROM sn LEFT JOIN sb ON sb.cell = sn.cell),
-    pd AS (SELECT t.vec_id AS q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qn t, c2 c),
-    probe AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd)
-      WHERE rn <= $IvfUpsertNprobe),
-    merged AS (SELECT c_id, cell FROM ab UNION ALL SELECT c_id, cell FROM an),
-    qraw AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 50 = 0),
-    araw AS (SELECT p.q_id, m.c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM probe p JOIN merged m ON m.cell = p.cell
-        JOIN e ec ON ec.vec_id = m.c_id
-        JOIN qraw eq ON eq.q_id = p.q_id),
-    approx AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM araw)
-      WHERE rn <= 5),
-    eraw AS (SELECT eq.q_id, ec.vec_id AS c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM e ec, qraw eq),
-    exact AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM eraw)
-      WHERE rn <= 5),
-    hits AS (SELECT x.q_id, COUNT(*) AS n_exact,
-        CAST(SUM(CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      FROM exact x LEFT JOIN approx a ON a.q_id = x.q_id AND a.c_id = x.c_id
-      GROUP BY x.q_id),
-    tot AS (SELECT CAST((1000000 * SUM(n_hits)) // SUM(n_exact) AS BIGINT) AS ppm
-      FROM hits)
+      FROM sn LEFT JOIN sb ON sb.cell = sn.cell)"""
+
+  /** Full SQL replay of [[vsIvfUpsert]]: base-grid quantization →
+    * unrolled integer Lloyd on the BASE slice → base + batch assignment
+    * with kept d2 → per-cell growth/drift arithmetic → merged nprobe=3
+    * probe → exact-cosine rerank → recall grade. */
+  val vsIvfUpsertSql: String =
+    int8GridCtesScaledBy(s"vec_id % $UpsertMod <> 0") + s""",
+    qb AS (SELECT * FROM quant WHERE vec_id % $UpsertMod <> 0),
+    ${ivfTrainSql("qb")},
+    ${ivfAssignSql("af", "quant")},
+    an AS (SELECT * FROM af WHERE c_id % $UpsertMod = 0),
+    ab AS (SELECT * FROM af WHERE c_id % $UpsertMod <> 0),
+    ${cellDriftSql("ab", "an")},
+    ${ivfGradeSql("quant", "e", "af", s"vec_id % $UpsertMod = 0", IvfUpsertNprobe)}
     SELECT an.c_id AS q_id, CAST(an.cell AS BIGINT) AS cell,
       cs.cell_n_base, cs.cell_n_new, cs.drift_ppm,
       h.n_exact, h.n_hits,
@@ -1629,7 +1518,6 @@ object VectorSearch {
     FROM an JOIN cs ON cs.cell = an.cell
       JOIN hits h ON h.q_id = an.c_id, tot
     ORDER BY q_id"""
-  }
 
   // ── vs_ivf_retrain — consume drift_ppm: retrain on the merged corpus ─
   /** Closes the loop [[vsIvfUpsert]] only signals (r16 verdict #3: the
@@ -1667,58 +1555,41 @@ object VectorSearch {
       drifted: Boolean): DataFrame = {
     val sess = spark
     import sess.implicits._
+    def isNew(c: Column): Column = c % UpsertMod === 0
     val e = emb(spark, dir)
-    val isNew = col("vec_id") % UpsertMod === 0
-    val mx = e.filter(!isNew)
-      .agg(max(array_max(transform(col("embedding"), x => abs(x)))).as("maxabs"))
-    val baseF = e.filter(!isNew)
+    val mx = e.filter(!isNew(col("vec_id"))).agg(IvfIndex.maxAbs(col("embedding")).as("maxabs"))
+    val baseF = e.filter(!isNew(col("vec_id")))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val shift: Column = if (drifted) col("maxabs") else lit(0.0)
-    val shifted = e.filter(isNew).crossJoin(broadcast(mx))
+    val shifted = e.filter(isNew(col("vec_id"))).crossJoin(broadcast(mx))
       .select(col("vec_id"),
         transform(col("embedding"), x => x + shift).as("v"))
     val corpusF = graft.util.Persist.stage(baseF.unionByName(shifted), eager = false)
-    def quant(src: DataFrame): DataFrame = src.crossJoin(broadcast(mx))
-      .select(col("vec_id"), transform(col("v"), x =>
-        round(x * lit(127.0) / col("maxabs"), 0).cast("long")).as("q"))
     // Base slice + frozen model shared with vs_ivf_upsert
-    // ([[ivfBaseGridModel]]): the memoized grid quantizes the base rows
-    // with the identical base-grid arithmetic as quant(baseF) (float →
-    // double widening is exact), and model0 is the same base-slice
-    // trainer both keys run.
-    val (qAllShared, model0) = ivfBaseGridModel(spark, dir)
-    val qb = qAllShared.filter(!(col("vec_id") % UpsertMod === 0))
-    val qn = graft.util.Persist.stage(quant(shifted), eager = false)
+    // ([[ivfBaseGridModel]]): the staged grid holds the base rows on the
+    // base grid, and model0 is the same base-slice trainer both keys run.
+    val (grid, model0) = ivfBaseGridModel(spark, dir)
+    val qb = grid.filter(!isNew(col("vec_id")))
+    val qn = graft.util.Persist.stage(shifted.crossJoin(broadcast(mx))
+      .select(col("vec_id"), IvfIndex.quantize(col("v"), col("maxabs")).as("qd")), eager = false)
     val qu = graft.util.Persist.stage(qb.unionByName(qn), eager = false)
     def assign(src: DataFrame, m: IvfIndex.IntModel): DataFrame = {
-      val cd = least(m.centroids.map { case (cid, cv) =>
-        struct(IvfIndex.intD2(col("q"), cv).as("d2"), lit(cid).as("cid"))
-      }: _*)
+      val cd = IvfIndex.intCellD2(col("qd"), m)
       src.select(col("vec_id").as("c_id"),
         cd.getField("cid").as("cell"), cd.getField("d2").as("d2"))
     }
-    val statsB = assign(qb, model0).groupBy("cell")
-      .agg(count(lit(1)).as("n_base"), sum("d2").as("s_base"))
-    val statsN = assign(qn, model0).groupBy("cell")
-      .agg(count(lit(1)).as("n_new"), sum("d2").as("s_new"))
-    val driftMax = statsN.join(statsB, Seq("cell"), "left")
-      .select(when(col("n_base").isNull, lit(0L))
-        .otherwise(idiv(lit(1000000L) * idiv(col("s_new"), col("n_new")),
-          greatest(idiv(col("s_base"), col("n_base")), lit(1L)))).as("d"))
-      .agg(max("d")).head().getLong(0)
+    val driftMax = cellDrift(assign(qb, model0), assign(qn, model0))
+      .agg(max("drift_ppm")).head().getLong(0)
     val due = if (driftMax >= RetrainDriftPpm) 1L else 0L
     val model1 =
-      if (due == 1L) IvfIndex.fitInt(qu, "vec_id", "q", k = 8, iters = 2)
+      if (due == 1L) IvfIndex.fitInt(qu, "vec_id", "qd", IvfIndex.Cells, IvfIndex.Iters)
       else model0
     // Both models' Σ min-d2 in ONE pass over the merged grid (r19
     // optimization: the before/after SSE arms each scanned qu — two
     // scans and two driver round-trips for numbers derivable from one
     // projection; when the flag did not fire the IDENTICAL scan ran
-    // twice). Values are unchanged: each column is exactly the old
-    // per-model least(...) spelling.
-    def sseCol(m: IvfIndex.IntModel): Column =
-      least(m.centroids.map { case (_, cv) =>
-        IvfIndex.intD2(col("q"), cv) }: _*)
+    // twice).
+    def sseCol(m: IvfIndex.IntModel): Column = IvfIndex.intCellD2(col("qd"), m).getField("d2")
     // The base/batch slice counts ride in the same aggregate (was two
     // separate count jobs over the same staged frame). Submitted from a
     // driver thread (guide §2.6 "overlap independent jobs"): given
@@ -1731,14 +1602,13 @@ object VectorSearch {
       qu.select(sseCol(model0).as("d0"), sseCol(model1).as("d1"),
           col("vec_id"))
         .agg(sum("d0"), sum("d1"),
-          sum(when(col("vec_id") % UpsertMod =!= 0, 1L).otherwise(0L)),
-          sum(when(col("vec_id") % UpsertMod === 0, 1L).otherwise(0L))).head())
+          sum(when(!isNew(col("vec_id")), 1L).otherwise(0L)),
+          sum(when(isNew(col("vec_id")), 1L).otherwise(0L))).head())
     val qraw = graft.util.Persist.stage(
       shifted.select(col("vec_id").as("q_id"), col("v").as("qv")), eager = false)
     val w = Window.partitionBy("q_id").orderBy(col("dist").asc_nulls_last, col("c_id"))
     // Not staged: with the fused two-arm grade below the exact arm is
-    // referenced exactly once (the old per-model gradePpm read it
-    // twice, which is what the checkpoint was for).
+    // referenced exactly once.
     val exact = corpusF.crossJoin(broadcast(qraw))
       .select(col("q_id"), col("vec_id").as("c_id"),
         dist(col("v"), col("qv")).as("dist"))
@@ -1752,15 +1622,9 @@ object VectorSearch {
     // windows partition by (arm, q_id)). Per-arm results are identical
     // to the sequential spelling — the arms never mix: every join and
     // the window carry the tag.
-    def probesOf(m: IvfIndex.IntModel, arm: Int): DataFrame = {
-      val probeStructs = m.centroids.map { case (cid, cv) =>
-        struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-      }
-      qn.select(col("vec_id").as("q_id"), col("q").as("qq"))
-        .select(col("q_id"),
-          explode(slice(array_sort(array(probeStructs: _*)), 1, IvfUpsertNprobe)).as("p"))
-        .select(lit(arm).as("arm"), col("q_id"), col("p.cid").as("cell"))
-    }
+    def probesOf(m: IvfIndex.IntModel, arm: Int): DataFrame =
+      IvfIndex.probe(qn.select(col("vec_id").as("q_id"), col("qd")), "qd", m, IvfUpsertNprobe)
+        .select(lit(arm).as("arm"), col("q_id"), col("cell"))
     val armProbes = probesOf(model0, 0).unionByName(probesOf(model1, 1))
     val armAssign = assign(qu, model0).select(lit(0).as("arm"), col("c_id"), col("cell"))
       .unionByName(
@@ -1796,118 +1660,45 @@ object VectorSearch {
   }
 
   /** Full SQL replay of [[vsIvfRetrain]]: frozen-grid quantization of
-    * base + shifted batch, the base trainer (rounds 1-2), the merged
-    * trainer (rounds 3-4), drift arithmetic, the due flag selecting
-    * the after-centroids, Σ min-d2 under both models, and both probe
-    * recall grades. */
+    * base + shifted batch, the base trainer, the merged trainer (CTE
+    * prefix `m`), drift arithmetic, the due flag selecting the
+    * after-centroids, Σ min-d2 under both models, and both probe recall
+    * grades. */
   val vsIvfRetrainSql: String = {
-    def round_(i: Int, cin: String, cout: String, src: String) =
-      ivfLloydRoundSql(i, cin, cout, src)
     def minD2(src: String, cs: String, out: String) = s"""
     $out AS (SELECT CAST(SUM(m) AS BIGINT) AS sse FROM (
-        SELECT t.vec_id, MIN(CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT)) AS m
+        SELECT t.vec_id, MIN(${NngSql.d2Sql("t.qd", "c.c")}) AS m
         FROM $src t, $cs c GROUP BY t.vec_id))"""
-    def grade(cs: String, tag: String) = s"""
-    pd$tag AS (SELECT t.vec_id AS q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qn t, $cs c),
-    probe$tag AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd$tag)
-      WHERE rn <= $IvfUpsertNprobe),
-    ad$tag AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qu t, $cs c),
-    au$tag AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM ad$tag)
-      WHERE rn = 1),
-    ar$tag AS (SELECT p.q_id, m.c_id, ${distSql("ec.v", "eq.qv")} AS dist
-      FROM probe$tag p JOIN au$tag m ON m.cell = p.cell
-        JOIN eu ec ON ec.vec_id = m.c_id
-        JOIN qraw eq ON eq.q_id = p.q_id),
-    ap$tag AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM ar$tag)
-      WHERE rn <= 5),
-    ppm$tag AS (SELECT CAST((1000000 * SUM(CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END))
-          // COUNT(*) AS BIGINT) AS ppm
-      FROM exact x LEFT JOIN ap$tag a ON a.q_id = x.q_id AND a.c_id = x.c_id)"""
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs
-      FROM e WHERE vec_id % $UpsertMod <> 0),
+    def grade(cs: String, p: String) = s"""${ivfAssignSql(s"${p}au", "qu", cs)},
+    ${ivfGradeSql("qu", "eu", s"${p}au", s"vec_id % $UpsertMod = 0", IvfUpsertNprobe, cs, p)}"""
+    int8GridCtesScaledBy(s"vec_id % $UpsertMod <> 0") + s""",
     eb AS (SELECT vec_id, v FROM e WHERE vec_id % $UpsertMod <> 0),
     en AS (SELECT vec_id, list_transform(v, x -> x + maxabs) AS v
       FROM e, mx WHERE vec_id % $UpsertMod = 0),
     eu AS (SELECT * FROM eb UNION ALL SELECT * FROM en),
-    qb AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM eb, mx),
-    qn AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM en, mx),
+    qb AS (SELECT * FROM quant WHERE vec_id % $UpsertMod <> 0),
+    qn AS (SELECT vec_id, ${IvfIndex.quantizeSql("v", "maxabs")} AS qd FROM en, mx),
     qu AS (SELECT * FROM qb UNION ALL SELECT * FROM qn),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qb ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1", "qb")},
-    ${round_(2, "c1", "c2", "qb")},
-    c0m AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qu ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(3, "c0m", "c3", "qu")},
-    ${round_(4, "c3", "c4", "qu")},
-    db AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qb t, c2 c),
-    ab AS (SELECT vec_id, cid AS cell, d2 FROM (
-        SELECT vec_id, cid, d2,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM db)
-      WHERE rn = 1),
-    dn AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qn t, c2 c),
-    an AS (SELECT vec_id, cid AS cell, d2 FROM (
-        SELECT vec_id, cid, d2,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dn)
-      WHERE rn = 1),
-    sb AS (SELECT cell, COUNT(*) AS n_base, CAST(SUM(d2) AS BIGINT) AS s_base
-      FROM ab GROUP BY 1),
-    sn AS (SELECT cell, COUNT(*) AS n_new, CAST(SUM(d2) AS BIGINT) AS s_new
-      FROM an GROUP BY 1),
-    dm AS (SELECT CAST(MAX(CASE WHEN sb.n_base IS NULL THEN 0
-          ELSE (1000000 * (sn.s_new // sn.n_new))
-               // greatest(sb.s_base // sb.n_base, 1) END) AS BIGINT) AS drift_max
-      FROM sn LEFT JOIN sb ON sb.cell = sn.cell),
+    ${ivfTrainSql("qb")},
+    ${ivfTrainSql("qu", "m")},
+    ${ivfAssignSql("ab", "qb")},
+    ${ivfAssignSql("an", "qn")},
+    ${cellDriftSql("ab", "an")},
+    dm AS (SELECT CAST(MAX(drift_ppm) AS BIGINT) AS drift_max FROM cs),
     due AS (SELECT CAST(CASE WHEN drift_max >= $RetrainDriftPpm THEN 1 ELSE 0 END
         AS BIGINT) AS due FROM dm),
-    cf AS (SELECT c4.cid, c4.c FROM c4, due WHERE due.due = 1
-      UNION ALL SELECT c2.cid, c2.c FROM c2, due WHERE due.due = 0),
-    ${minD2("qu", "c2", "sse0")},
+    cf AS (SELECT mcents.cid, mcents.c FROM mcents, due WHERE due.due = 1
+      UNION ALL SELECT cents.cid, cents.c FROM cents, due WHERE due.due = 0),
+    ${minD2("qu", "cents", "sse0")},
     ${minD2("qu", "cf", "sse1")},
-    qraw AS (SELECT vec_id AS q_id, v AS qv FROM en),
-    er AS (SELECT eq.q_id, ec.vec_id AS c_id, ${distSql("ec.v", "eq.qv")} AS dist
-      FROM eu ec, qraw eq),
-    exact AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM er)
-      WHERE rn <= 5),
-    ${grade("c2", "0")},
-    ${grade("cf", "1")}
+    ${grade("cents", "before_")},
+    ${grade("cf", "after_")}
     SELECT CAST((SELECT COUNT(*) FROM qb) AS BIGINT) AS n_base,
       CAST((SELECT COUNT(*) FROM qn) AS BIGINT) AS n_new,
       dm.drift_max AS drift_max_ppm, due.due AS retrain_due,
       sse0.sse AS sse_before, sse1.sse AS sse_after,
-      ppm0.ppm AS recall_before_ppm, ppm1.ppm AS recall_after_ppm
-    FROM dm, due, sse0, sse1, ppm0, ppm1"""
+      b.ppm AS recall_before_ppm, a.ppm AS recall_after_ppm
+    FROM dm, due, sse0, sse1, before_tot b, after_tot a"""
   }
 
   // ── vs_ivf_delete — IVF tombstone deletion + occupancy-drop report ───
@@ -1951,95 +1742,24 @@ object VectorSearch {
     * dropped) collapses recall far below ½. */
   final val IvfDeleteRecallFloorPpm = 500000L
   def vsIvfDelete: Q = (spark, dir) => {
-    val e = emb(spark, dir)
-    val (qv, model) = ivfTrainedModel(spark, dir)
+    val (model, assigned) = ivfTrained(spark, dir)
     def vic(c: Column): Column = c % DeleteMod === 0
-    val assigned = graft.util.Persist.stage(
-      qv.select(col("vec_id").as("c_id"),
-        IvfIndex.intCellOf(col("q"), model).as("cell")), eager = false)
-    val alive = assigned.filter(!vic(col("c_id")))
-    // Per-cell occupancy drop (8 rows; cells that lost everything keep
-    // their row — the left join is against the centroid table).
-    val before = assigned.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    val dead = assigned.filter(vic(col("c_id")))
-      .groupBy("cell").agg(count(lit(1)).as("n_deleted"))
-    val sess = spark
-    import sess.implicits._
-    val cents = model.centroids.map { case (cid, cv) =>
-      (cid.toLong, cv.map(x => x * x).sum) }.toDF("cell", "centroid_norm2")
-    val report = cents
-      .join(before.select(col("cell").cast("long").as("cell"), col("n_before")), Seq("cell"), "left")
-      .join(dead.select(col("cell").cast("long").as("cell"), col("n_deleted")), Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_before"), lit(0L)).as("n_before"),
-        coalesce(col("n_deleted"), lit(0L)).as("n_deleted"),
-        (coalesce(col("n_before"), lit(0L))
-          - coalesce(col("n_deleted"), lit(0L))).as("n_after"),
-        col("centroid_norm2"))
-    // Serving grade over survivors through the pruned index.
-    val sur = e.filter(!vic(col("vec_id")))
-    val probeStructs = model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-    }
-    val probes = qv.filter(col("vec_id") % 100 === 5)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"))
-      .select(col("q_id"),
-        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("cell"))
-    val qraw = sur.filter(col("vec_id") % 100 === 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("q_id").orderBy(col("dist").asc_nulls_last, col("c_id"))
-    val approx = alive.join(broadcast(probes), "cell")
-      .join(sur.withColumnRenamed("vec_id", "c_id"), "c_id")
-      .join(broadcast(qraw), "q_id")
-      .select(col("q_id"), col("c_id"), dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val exact = sur.crossJoin(broadcast(qraw))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val tot = exact.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
-      .agg(sum(coalesce(col("hit"), lit(0L))), count(lit(1))).head()
-    require(tot.getLong(1) > 0,
-      "IVF delete has no survivor queries to grade")
-    val ppm = 1000000L * tot.getLong(0) / tot.getLong(1)
-    report
-      .withColumn("mean_recall_ppm", lit(ppm))
-      .withColumn("below_floor",
-        lit(if (ppm < IvfDeleteRecallFloorPpm) 1L else 0L))
-      .orderBy("cell")
+    val ppm = recallPpm(ivfRecall(emb(spark, dir).filter(!vic(col("vec_id"))),
+      int8GridShared(spark, dir), model, assigned.filter(!vic(col("c_id"))),
+      _ % 100 === 5, IvfTrainedNprobe), "IVF delete")
+    // Per-cell occupancy drop (cells that lost everything keep their row
+    // — the counts join the centroid table).
+    withRecall(cellCounts(spark, model,
+        "n_before" -> assigned, "n_deleted" -> assigned.filter(vic(col("c_id"))))
+        .select(col("cell"), col("n_before"), col("n_deleted"),
+          (col("n_before") - col("n_deleted")).as("n_after"), col("centroid_norm2")),
+      ppm, IvfDeleteRecallFloorPpm).orderBy("cell")
   }
 
-  /** Full SQL replay of [[vsIvfDelete]]: shared quantize + unrolled
-    * Lloyd on the FULL corpus (the trained artifact), assignment,
+  /** Full SQL replay of [[vsIvfDelete]]: the trained-IVF CTEs,
     * tombstone split, per-cell occupancy report, survivor-only probe +
     * exact-cosine rerank, recall grade over survivors. */
-  val vsIvfDeleteSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qv")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    df AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM df)
-      WHERE rn = 1),
+  val vsIvfDeleteSql: String = ivfTrainedCtes + s""",
     alive AS (SELECT c_id, cell FROM af WHERE c_id % $DeleteMod <> 0),
     nb AS (SELECT cell, COUNT(*) AS n_before FROM af GROUP BY 1),
     nd AS (SELECT cell, COUNT(*) AS n_deleted FROM af
@@ -2049,41 +1769,14 @@ object VectorSearch {
         CAST(COALESCE(nd.n_deleted, 0) AS BIGINT) AS n_deleted,
         CAST(COALESCE(nb.n_before, 0) - COALESCE(nd.n_deleted, 0) AS BIGINT) AS n_after,
         CAST(list_sum(list_transform(c.c, x -> x * x)) AS BIGINT) AS centroid_norm2
-      FROM c2 c LEFT JOIN nb ON nb.cell = c.cid LEFT JOIN nd ON nd.cell = c.cid),
-    qs AS (SELECT vec_id AS q_id, q FROM qv WHERE vec_id % 100 = 5),
-    pd AS (SELECT t.q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qs t, c2 c),
-    probe AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd)
-      WHERE rn <= $IvfTrainedNprobe),
+      FROM cents c LEFT JOIN nb ON nb.cell = c.cid LEFT JOIN nd ON nd.cell = c.cid),
     sur AS (SELECT vec_id, v FROM e WHERE vec_id % $DeleteMod <> 0),
-    qraw AS (SELECT vec_id AS q_id, v FROM sur WHERE vec_id % 100 = 5),
-    araw AS (SELECT p.q_id, a.c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM probe p JOIN alive a ON a.cell = p.cell
-        JOIN sur ec ON ec.vec_id = a.c_id
-        JOIN qraw eq ON eq.q_id = p.q_id),
-    approx AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM araw)
-      WHERE rn <= 5),
-    eraw AS (SELECT eq.q_id, ec.vec_id AS c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM sur ec, qraw eq),
-    exact AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM eraw)
-      WHERE rn <= 5),
-    tot AS (SELECT CAST((1000000 * SUM(CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END))
-          // COUNT(*) AS BIGINT) AS ppm
-      FROM exact x LEFT JOIN approx a ON a.q_id = x.q_id AND a.c_id = x.c_id)
+    ${ivfGradeSql("quant", "sur", "alive", "vec_id % 100 = 5", IvfTrainedNprobe)}
     SELECT rep.cell, rep.n_before, rep.n_deleted, rep.n_after, rep.centroid_norm2,
       ppm AS mean_recall_ppm,
       CAST(CASE WHEN ppm < $IvfDeleteRecallFloorPpm THEN 1 ELSE 0 END AS BIGINT)
         AS below_floor
     FROM rep, tot ORDER BY cell"""
-  }
 
   // ── vs_ivf_merge — segment-merge of two IVF indexes ──────────────────
   /** The merge leg of the IVF lifecycle (r16 — with it the maintenance
@@ -2110,155 +1803,48 @@ object VectorSearch {
     * oracle SFs; a merge that loses the fresh segment collapses far
     * below it because a third of every exact top-5 goes missing). */
   def vsIvfMerge: Q = (spark, dir) => {
-    val e = emb(spark, dir)
-    // Full-corpus grid + the %3 base-segment trainer, memoized per
-    // (session, dir) like the other lifecycle models
-    // ([[ivfModelShared]]): deterministic, content-identical to a fresh
-    // train, so the sibling hash is untouched.
-    val (qAll, model) = ivfModelShared(spark, dir, "base3") {
-      val mx = e.agg(max(array_max(transform(col("embedding"), x => abs(x)))).as("maxabs"))
-      val q = graft.util.Persist.stage(
-        e.crossJoin(broadcast(mx)).select(col("vec_id"),
-          transform(col("embedding"), x =>
-            round(x * lit(127.0) / col("maxabs"), 0).cast("long")).as("q")))
-      (q, IvfIndex.fitInt(q.filter(col("vec_id") % 3 =!= 0), "vec_id", "q",
-        k = 8, iters = 2))
-    }
-    val qb = qAll.filter(col("vec_id") % 3 =!= 0)
-    val qf = qAll.filter(col("vec_id") % 3 === 0)
-    def assign(src: DataFrame): DataFrame = src.select(col("vec_id").as("c_id"),
-      IvfIndex.intCellOf(col("q"), model).as("cell"))
-    val aBase = graft.util.Persist.stage(assign(qb), eager = false)
-    val aFresh = graft.util.Persist.stage(assign(qf), eager = false)
-    val merged = aBase.unionByName(aFresh)
-    val sess = spark
-    import sess.implicits._
-    val cents = model.centroids.map { case (cid, cv) =>
-      (cid.toLong, cv.map(x => x * x).sum) }.toDF("cell", "centroid_norm2")
-    val report = cents
-      .join(aBase.groupBy("cell").agg(count(lit(1)).as("n_base"))
-        .select(col("cell").cast("long").as("cell"), col("n_base")), Seq("cell"), "left")
-      .join(aFresh.groupBy("cell").agg(count(lit(1)).as("n_fresh"))
-        .select(col("cell").cast("long").as("cell"), col("n_fresh")), Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_fresh"), lit(0L)).as("n_fresh"),
-        (coalesce(col("n_base"), lit(0L))
-          + coalesce(col("n_fresh"), lit(0L))).as("n_merged"),
-        col("centroid_norm2"))
-    val probeStructs = model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-    }
-    val probes = qAll.filter(col("vec_id") % 100 === 3)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"))
-      .select(col("q_id"),
-        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("cell"))
-    val qraw = e.filter(col("vec_id") % 100 === 3)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("q_id").orderBy(col("dist").asc_nulls_last, col("c_id"))
-    val approx = merged.join(broadcast(probes), "cell")
-      .join(e.withColumnRenamed("vec_id", "c_id"), "c_id")
-      .join(broadcast(qraw), "q_id")
-      .select(col("q_id"), col("c_id"), dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val exact = e.crossJoin(broadcast(qraw))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        dist(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("c_id"))
-    val tot = exact.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
-      .agg(sum(coalesce(col("hit"), lit(0L))), count(lit(1))).head()
-    require(tot.getLong(1) > 0, "IVF merge has no queries to grade")
-    val ppm = 1000000L * tot.getLong(0) / tot.getLong(1)
-    report
-      .withColumn("mean_recall_ppm", lit(ppm))
-      .withColumn("below_floor",
-        lit(if (ppm < IvfDeleteRecallFloorPpm) 1L else 0L))
-      .orderBy("cell")
+    val grid = int8GridShared(spark, dir)
+    def isBase(c: Column): Column = c % 3 =!= 0
+    // The base-segment trainer, staged per (session, dir) like the other
+    // lifecycle models; the grid is the shared full-corpus one.
+    val model = graft.util.Staged.get(spark, "vs.ivfModel:base3", dir)(
+      IvfIndex.fitInt(grid.filter(isBase(col("vec_id"))), "vec_id", "qd",
+        IvfIndex.Cells, IvfIndex.Iters))
+    // ONE assignment pass onto the base centroids: base and fresh rows.
+    val merged = graft.util.Persist.stage(grid.select(col("vec_id").as("c_id"),
+      IvfIndex.intCellOf(col("qd"), model).as("cell")), eager = false)
+    val ppm = recallPpm(ivfRecall(emb(spark, dir), grid, model, merged,
+      _ % 100 === 3, IvfTrainedNprobe), "IVF merge")
+    withRecall(cellCounts(spark, model,
+        "n_base" -> merged.filter(isBase(col("c_id"))),
+        "n_fresh" -> merged.filter(!isBase(col("c_id"))))
+        .select(col("cell"), col("n_base"), col("n_fresh"),
+          (col("n_base") + col("n_fresh")).as("n_merged"), col("centroid_norm2")),
+      ppm, IvfDeleteRecallFloorPpm).orderBy("cell")
   }
 
   /** Full SQL replay of [[vsIvfMerge]]: full-grid quantize → unrolled
     * Lloyd on the BASE slice → base + fresh reassignment onto the base
     * centroids → per-cell consolidation report → merged nprobe probe →
     * exact-cosine rerank → grade over the full corpus. */
-  val vsIvfMergeSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qb")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    qb AS (SELECT * FROM qv WHERE vec_id % 3 <> 0),
-    qf AS (SELECT * FROM qv WHERE vec_id % 3 = 0),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qb ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    db AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qb t, c2 c),
-    ab AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM db)
-      WHERE rn = 1),
-    dn AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qf t, c2 c),
-    an AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dn)
-      WHERE rn = 1),
-    nb AS (SELECT cell, COUNT(*) AS n_base FROM ab GROUP BY 1),
-    nf AS (SELECT cell, COUNT(*) AS n_fresh FROM an GROUP BY 1),
+  val vsIvfMergeSql: String = int8GridCtes + s""",
+    qb AS (SELECT * FROM quant WHERE vec_id % 3 <> 0),
+    ${ivfTrainSql("qb")},
+    ${ivfAssignSql("af", "quant")},
+    nb AS (SELECT cell, COUNT(*) AS n_base FROM af WHERE c_id % 3 <> 0 GROUP BY 1),
+    nf AS (SELECT cell, COUNT(*) AS n_fresh FROM af WHERE c_id % 3 = 0 GROUP BY 1),
     rep AS (SELECT CAST(c.cid AS BIGINT) AS cell,
         CAST(COALESCE(nb.n_base, 0) AS BIGINT) AS n_base,
         CAST(COALESCE(nf.n_fresh, 0) AS BIGINT) AS n_fresh,
         CAST(COALESCE(nb.n_base, 0) + COALESCE(nf.n_fresh, 0) AS BIGINT) AS n_merged,
         CAST(list_sum(list_transform(c.c, x -> x * x)) AS BIGINT) AS centroid_norm2
-      FROM c2 c LEFT JOIN nb ON nb.cell = c.cid LEFT JOIN nf ON nf.cell = c.cid),
-    merged AS (SELECT c_id, cell FROM ab UNION ALL SELECT c_id, cell FROM an),
-    qs AS (SELECT vec_id AS q_id, q FROM qv WHERE vec_id % 100 = 3),
-    pd AS (SELECT t.q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qs t, c2 c),
-    probe AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd)
-      WHERE rn <= $IvfTrainedNprobe),
-    qraw AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id % 100 = 3),
-    araw AS (SELECT p.q_id, m.c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM probe p JOIN merged m ON m.cell = p.cell
-        JOIN e ec ON ec.vec_id = m.c_id
-        JOIN qraw eq ON eq.q_id = p.q_id),
-    approx AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM araw)
-      WHERE rn <= 5),
-    eraw AS (SELECT eq.q_id, ec.vec_id AS c_id, ${distSql("ec.v", "eq.v")} AS dist
-      FROM e ec, qraw eq),
-    exact AS (SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-          row_number() OVER (PARTITION BY q_id ORDER BY dist, c_id) AS rn FROM eraw)
-      WHERE rn <= 5),
-    tot AS (SELECT CAST((1000000 * SUM(CASE WHEN a.c_id IS NOT NULL THEN 1 ELSE 0 END))
-          // COUNT(*) AS BIGINT) AS ppm
-      FROM exact x LEFT JOIN approx a ON a.q_id = x.q_id AND a.c_id = x.c_id)
+      FROM cents c LEFT JOIN nb ON nb.cell = c.cid LEFT JOIN nf ON nf.cell = c.cid),
+    ${ivfGradeSql("quant", "e", "af", "vec_id % 100 = 3", IvfTrainedNprobe)}
     SELECT rep.cell, rep.n_base, rep.n_fresh, rep.n_merged, rep.centroid_norm2,
       ppm AS mean_recall_ppm,
       CAST(CASE WHEN ppm < $IvfDeleteRecallFloorPpm THEN 1 ELSE 0 END AS BIGINT)
         AS below_floor
     FROM rep, tot ORDER BY cell"""
-  }
 
   // ── vs_index_vacuum — compaction of a tombstoned stored-index table ──
   /** The vacuum leg of the stored-index lifecycle (r15 verdict #7):
@@ -2297,9 +1883,7 @@ object VectorSearch {
     val tag = g0.split('_').last
     val (p0, p1) = (s"$ivfVacuumRoot/gen0-$tag", s"$ivfVacuumRoot/gen1-$tag")
     graft.util.Staged.get(spark.sparkContext, "vs.ivfVacuum", dir) {
-      val (qv, model) = ivfTrainedModel(spark, dir)
-      val assigned = qv.select(col("vec_id").as("c_id"),
-        IvfIndex.intCellOf(col("q"), model).as("cell"))
+      val assigned = ivfTrained(spark, dir)._2.select("c_id", "cell")
       graft.sources.Sinks.writeBucketedAt(
         assigned.filter(col("c_id") % UpsertMod =!= 0), g0, "cell",
         IvfVacuumBuckets, p0)
@@ -2329,33 +1913,12 @@ object VectorSearch {
         "cellsum_before", "cellsum_after")
   }
 
-  /** Manifest oracle: the shared Lloyd CTEs (the trained assignment is
+  /** Manifest oracle: the trained-IVF CTEs (the trained assignment is
     * gen-0's content regardless of its physical two-append layout),
     * then the tombstone arithmetic — the vacuum round-trip is
     * value-preserving, so the reloaded generations' stats equal the
     * logical ones. */
-  val vsIndexVacuumSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qv")
-    s"""
-    WITH e AS ($eSql),
-    mx AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS maxabs FROM e),
-    qv AS (SELECT vec_id,
-        list_transform(v, x -> CAST(round((x * 127.0) / maxabs) AS BIGINT)) AS q
-      FROM e, mx),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    df AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM df)
-      WHERE rn = 1)
+  val vsIndexVacuumSql: String = ivfTrainedCtes + s"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows_before,
       CAST(SUM(CASE WHEN c_id % $DeleteMod = 0 THEN 1 ELSE 0 END) AS BIGINT)
         AS n_rows_dead,
@@ -2365,7 +1928,6 @@ object VectorSearch {
       CAST(SUM(CASE WHEN c_id % $DeleteMod <> 0 THEN cell ELSE 0 END) AS BIGINT)
         AS cellsum_after
     FROM af"""
-  }
 
   // ── vs_lsh_search — random-hyperplane LSH bucketed pair search ───────
   /** Random-hyperplane LSH at the n-ADAPTIVE geometry (round 12 — see
@@ -3416,28 +2978,6 @@ object VectorSearch {
     * seeding, exact-baseline grading) and are not claimed BNL-free;
     * the tail plan is additionally pinned cartesian-free. */
   final val NngRecallFloorPpm = 800000L
-  // ── NNG family shared-frame memos (r17 verdict #3: the family's 8
-  //    keys were 24% of the sf1 sweep, and each key re-staged the int8
-  //    grid — a full quantize + localCheckpoint per key — while
-  //    search/load re-computed the IDENTICAL exact grading arm). The
-  //    planner quadruplet's memoization pattern (r16 verdict #3),
-  //    applied here: one staged grid per (session, dir), one staged
-  //    exact arm per (session, dir, query-slice) for full-corpus
-  //    grades. The memoized frames are content-identical to the inline
-  //    spellings, so every sibling hash is untouched — only the
-  //    rebuild cost goes away. ────────────────────────────────────────
-  /** The staged int8 grid every graph key quantizes from. */
-  private[graft] def nngQv(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Staged.get(spark, "vs.int8Grid", dir)(
-      graft.util.Persist.stage(int8Grid(spark, dir), eager = false))
-  /** The same memoized staged grid under a family-neutral name (r19
-    * optimization: the PQ / sparse / MaxSim / MMR keys and the
-    * streaming serve twins each re-ran [[int8Grid]]'s maxabs pass +
-    * quantize transform per evaluation — identical content to this
-    * memo's frame, so they read it instead; only the repeated
-    * two-pass quantization goes away). */
-  private[graft] def int8GridShared(spark: SparkSession, dir: String): DataFrame =
-    nngQv(spark, dir)
   /** Staged exact top-K truth for a FULL-corpus grade at query slice
     * `vec_id % 100 == mod` — identical between [[vsNngSearch]] and
     * [[vsNngLoad]] (both grade slice 0 against the full corpus), so it
@@ -3447,13 +2987,13 @@ object VectorSearch {
       qv: DataFrame, qs: DataFrame): DataFrame = {
     // r18 advice: the memo key is (session, dir, mod) — qv/qs are
     // ignored on a hit, which is only sound while every caller passes
-    // the UNFILTERED full-corpus grid. nngQv memoizes per (session,
+    // the UNFILTERED full-corpus grid. int8GridShared memoizes per (session,
     // dir), so reference identity is the cheap exact check: a future
     // caller grading a filtered/survivor corpus through the memo path
     // fails loudly here instead of silently grading against the wrong
     // truth (such callers must pass exactMemo = None and build inline).
-    require(qv eq nngQv(spark, dir),
-      "nngExactFull requires the unfiltered nngQv grid for (session, dir) - " +
+    require(qv eq int8GridShared(spark, dir),
+      "nngExactFull requires the unfiltered int8GridShared grid for (session, dir) - " +
       "filtered/survivor corpora must grade inline (exactMemo = None)")
     graft.util.Staged.get(spark, s"vs.nngExact:$mod", dir) {
       val wQ = Window.partitionBy("q_id").orderBy(col("d2"), col("c_id"))
@@ -3523,7 +3063,7 @@ object VectorSearch {
   def vsNngSearch: Q = (spark, dir) => {
     // One staged evaluation of the grid — the build rounds, the search
     // hops and the exact baseline all reuse it (memoized family-wide).
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val (graph, init) = NnGraph.buildShared(qv, dir, "full")
     val qs = qv.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
@@ -3723,7 +3263,7 @@ object VectorSearch {
   private def ensureNngStored(spark: SparkSession, dir: String): Unit =
     graft.util.Staged.get(spark.sparkContext, "vs.nngStore", dir) {
       val tag = storedTable("x", dir).split('_').last
-      val qv = nngQv(spark, dir)
+      val qv = int8GridShared(spark, dir)
       val (refined, init) = NnGraph.buildShared(qv, dir, "full")
       graft.sources.Sinks.writeBucketedAt(refined, storedTable("graft_nng_refined", dir),
         "src", NngStoreBuckets, s"$nngStoreRoot/refined-$tag")
@@ -3779,7 +3319,7 @@ object VectorSearch {
     ensureNngStored(spark, dir)
     val refined = spark.table(storedTable("graft_nng_refined", dir))
     val init = spark.table(storedTable("graft_nng_init", dir))
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val qs = qv.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     // The hop chain MUST run over the reloaded tables (the key's
@@ -3856,7 +3396,7 @@ object VectorSearch {
     * twin. */
   private[graft] def nngUpsertArtifacts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val base = graft.util.Persist.stage(
       qv.filter(col("vec_id") % UpsertMod =!= 0), eager = false)
     val (refined, init) = NnGraph.buildShared(base, dir, s"base$UpsertMod")
@@ -4016,7 +3556,7 @@ object VectorSearch {
   }
 
   def vsNngDelete: Q = (spark, dir) => {
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val sur = graft.util.Persist.stage(
       qv.filter(col("vec_id") % DeleteMod =!= 0), eager = false)
@@ -4101,7 +3641,7 @@ object VectorSearch {
     val tag = g0.split('_').last
     val (p0, p1) = (s"$nngVacuumRoot/gen0-$tag", s"$nngVacuumRoot/gen1-$tag")
     graft.util.Staged.get(spark.sparkContext, "vs.nngVacuum", dir) {
-      val qv = nngQv(spark, dir)
+      val qv = int8GridShared(spark, dir)
       val (refined, _) = NnGraph.buildShared(qv, dir, "full")
       graft.sources.Sinks.writeBucketedAt(
         refined.filter(col("src") % UpsertMod =!= 0), g0, "src",
@@ -4220,8 +3760,8 @@ object VectorSearch {
     vsSearchPlannedWith(spark, dir, PlanBruteCutoff)
 
   /** Shared planner grading artifacts, ONE evaluation per (session,
-    * dir): the staged quant corpus + query slice, and per predicate the
-    * staged pass slice, its exact cardinality, and the STAGED exact
+    * dir): per predicate the staged pass slice of the shared int8 grid,
+    * its exact cardinality, and the STAGED exact
     * filtered top-5 — the grading truth and the brute arm's own result,
     * all routing-independent. [[vsSearchPlanned]] and [[vsPlannedKmv]]
     * grade the SAME three predicates; without this memo the pair
@@ -4231,17 +3771,13 @@ object VectorSearch {
     * measured sf1 bulk of both keys). Same plan-level-reuse posture as
     * [[NnGraph.buildShared]] (the planner's predicate slices and truth
     * tables are a deployment's stored evaluation artifacts). */
-  private type PlannerArts =
-    (DataFrame, DataFrame, Seq[(String, DataFrame, Long, DataFrame)])
-  private def plannerArtifacts(spark: SparkSession, dir: String): PlannerArts =
+  private def plannerArtifacts(spark: SparkSession, dir: String)
+      : Seq[(String, DataFrame, Long, DataFrame)] =
     graft.util.Staged.get(spark, "vs.planner", dir) {
-      // Its own staged grid, not the shared nngQv frame: a value holds
-      // only frames its build staged (see graft.util.Staged).
-      val qv = graft.util.Persist.stage(int8Grid(spark, dir), eager = false)
-      val qs = qv.filter(col("vec_id") % 100 === 9)
-        .select(col("vec_id").as("q_id"), col("qd").as("qq"))
+      val qv = int8GridShared(spark, dir)
+      val qs = plannerQueries(qv)
       val wQ = Window.partitionBy("pred", "q_id").orderBy(col("d2"), col("c_id"))
-      val arms = plannerPreds(spark, dir).map { case (tag, pass) =>
+      plannerPreds(spark, dir).map { case (tag, pass) =>
         val fcorp = graft.util.Persist.stage(
           qv.join(pass, "vec_id").withColumn("pred", lit(tag)), eager = false)
         val nPass = fcorp.count()
@@ -4254,8 +3790,10 @@ object VectorSearch {
           eager = false)
         (tag, fcorp, nPass, exact)
       }
-      (qv, qs, arms)
     }
+  /** The planner family's query slice (q_id, qq) of the grid `qv`. */
+  private def plannerQueries(qv: DataFrame): DataFrame =
+    qv.filter(col("vec_id") % 100 === 9).select(col("vec_id").as("q_id"), col("qd").as("qq"))
 
   // ── Shared grading-arm memos (r16 verdict #3: the planner quadruplet
   //    re-computed identical physical arms 4× — ~12% of the sf1 sweep).
@@ -4265,46 +3803,26 @@ object VectorSearch {
   /** Graph build + the base hop frame for the standard query slice. */
   private def plannerGraphParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (qv, qs, _) = plannerArtifacts(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val base = graft.util.Staged.get(spark, "vs.plannerGraph", dir)(
-      graft.util.Persist.stage(NnGraph.search(refined, init, qv, qs), eager = false))
+      graft.util.Persist.stage(NnGraph.search(refined, init, qv, plannerQueries(qv)),
+        eager = false))
     (refined, init, base)
   }
   /** Per-predicate staged GRAPH-arm frame (base survivors ∪ escalation,
     * top-K cut) — shared verbatim across the planner keys. */
   private def plannerGraphArm(spark: SparkSession, dir: String, tag: String): DataFrame =
     graft.util.Staged.get(spark, s"vs.plannerGraphArm:$tag", dir) {
-      val (qv, qs, preds) = plannerArtifacts(spark, dir)
-      val (t, fcorp, nPass, _) = preds.find(_._1 == tag)
+      val qv = int8GridShared(spark, dir)
+      val (t, fcorp, nPass, _) = plannerArtifacts(spark, dir).find(_._1 == tag)
         .getOrElse(sys.error(s"unknown planner predicate $tag"))
       val wQ = Window.partitionBy("pred", "q_id").orderBy(col("d2"), col("c_id"))
       graft.util.Persist.stage(
-        plannerGraphApprox(qv, qs, fcorp, nPass, t, wQ, plannerGraphParts(spark, dir)),
+        plannerGraphApprox(qv, plannerQueries(qv), fcorp, nPass, t, wQ,
+          plannerGraphParts(spark, dir)),
         eager = false)
     }
-  /** The IVF arm (trained model + staged assignment + per-query probes),
-    * memoized per (session, dir): the ANALYZE-time occupancy persist
-    * ([[ensurePlannerStats]]) and the route key's serving arm share ONE
-    * training. */
-  private[graft] def plannerIvfParts(spark: SparkSession, dir: String)
-      : (IvfIndex.IntModel, DataFrame, DataFrame) = {
-    val (qv, qs, _) = plannerArtifacts(spark, dir)
-    val (model, assigned) = graft.util.Staged.get(spark, "vs.plannerIvf", dir) {
-      val model = IvfIndex.fitInt(qv, "vec_id", "qd", k = PlanIvfCells, iters = 2)
-      (model, graft.util.Persist.stage(
-        qv.select(col("vec_id").as("c_id"),
-          IvfIndex.intCellOf(col("qd"), model).as("cell")), eager = false))
-    }
-    val probeStructs = model.centroids.map { case (cid, cv) =>
-      struct(IvfIndex.intD2(col("qq"), cv).as("d2"), lit(cid).as("cid"))
-    }
-    val probes = qs.select(col("q_id"),
-        explode(slice(array_sort(array(probeStructs: _*)), 1, IvfTrainedNprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("cell"))
-    (model, assigned, probes)
-  }
-
   /** `routeStat`: the statistic the ROUTING decision reads — None =
     * the exact pass count (the registered key's contract: the count is
     * part of the hashed output, and `n_pass` stays exact either way);
@@ -4348,7 +3866,7 @@ object VectorSearch {
       spark: SparkSession, dir: String, cutoff: Long,
       routeStat: Option[(String, DataFrame) => Long] = None,
       emitRouteStat: Boolean = false): DataFrame = {
-    val (_, _, preds) = plannerArtifacts(spark, dir)
+    val preds = plannerArtifacts(spark, dir)
     // Graph machinery is memoized per (session, dir) and built only on
     // first use: a run where every predicate routes to brute (the
     // oracle SFs) never builds the index, and the planner quadruplet
@@ -4546,10 +4064,10 @@ object VectorSearch {
       // Per-cell occupancy of the planner's IVF arm (r16 verdict #7):
       // the uniform n·nprobe/k cost model assumes balanced cells and
       // mis-routes on skew; a real ANALYZE counts the actual lists.
-      // Training runs HERE, once per corpus (the amortized posture) —
-      // the route key reads the persisted counts, never a scan.
-      val (_, assigned, _) = plannerIvfParts(spark, dir)
-      val cells = assigned.groupBy("cell").agg(count(lit(1)).as("cnt"))
+      // The trained IVF ([[ivfTrained]], once per session) is counted
+      // HERE, once per corpus (the amortized posture) — the route key
+      // reads the persisted counts, never a scan.
+      val cells = ivfTrained(spark, dir)._2.groupBy("cell").agg(count(lit(1)).as("cnt"))
         .select(lit("cell").as("col_name"),
           col("cell").cast("string").as("value"), col("cnt"))
       hist.unionByName(total).unionByName(cells).coalesce(1)
@@ -4652,8 +4170,7 @@ object VectorSearch {
         .groupBy("col_name", "value").agg(count(lit(1)).as("cnt"))
       val total = ep.agg(count(lit(1)).as("cnt"))
         .select(lit("_total").as("col_name"), lit("n").as("value"), col("cnt"))
-      val (_, assigned, _) = plannerIvfParts(spark, dir)
-      val cells = assigned
+      val cells = ivfTrained(spark, dir)._2.select("c_id", "cell")
         .join(vic.withColumnRenamed("vec_id", "c_id"), Seq("c_id"), "left_anti")
         .groupBy("cell").agg(count(lit(1)).as("cnt"))
         .select(lit("cell").as("col_name"),
@@ -4692,7 +4209,6 @@ object VectorSearch {
     * both histogram generations, both occupancy costs, and the same
     * three-way decision CASE per (phase, pred). */
   val vsPlannedRefreshSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qvv")
     def estSql(i: Int, s: String) = i match {
       case 1 => s"""CAST((SELECT COALESCE(SUM(c), 0) FROM hl$s WHERE label = 7)
           * (SELECT COALESCE(SUM(c), 0) FROM hg$s WHERE lang = 'de')
@@ -4716,23 +4232,7 @@ object VectorSearch {
            WHEN (SELECT c FROM $ci) <= $PlanBruteCutoff THEN 'ivf'
            ELSE 'graph' END AS plan"""
       }.mkString("\n    UNION ALL\n    ")
-    int8GridCtes + s""",
-    qvv AS (SELECT vec_id, qd AS q FROM quant),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qvv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id
-      LIMIT $PlanIvfCells),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    dfq AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qvv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dfq)
-      WHERE rn = 1),
+    ivfTrainedCtes + s""",
     ep AS (SELECT e2.vec_id, e2.label, d.lang FROM embeddings e2
       JOIN documents d ON e2.vec_id = d.doc_id),
     vic AS (SELECT vec_id FROM ep WHERE label >= 5 AND vec_id % 2 = 0),
@@ -4782,11 +4282,10 @@ object VectorSearch {
     * near n=20k as before), and PlannedRouteSpec both forces all
     * three arms through cost overrides and plants a SKEWED-cell
     * corpus where the uniform model mis-routes and the occupancy
-    * model flips the plan. The IVF arm trains [[IvfIndex.fitInt]] on
-    * the SHARED int8 grid (same quantization as the exact/graph arms
-    * — one corpus representation, three indexes over it), ONCE per
-    * (session, dir) at ANALYZE time ([[plannerIvfParts]] — the
-    * occupancy persist and the serving arm share the training), and
+    * model flips the plan. The IVF arm is the session's one trained
+    * IVF ([[ivfTrained]], [[IvfIndex.fitInt]] on the SHARED int8 grid —
+    * one corpus representation, three indexes over it; the ANALYZE-time
+    * occupancy persist and the serving arm read the same training), and
     * scores probed-cell ∩ pass candidates with the same integer d2 as
     * the grading truth.
     * Output contract = [[vsPlannedKmv]]'s, with `plan` ∈ {brute, ivf,
@@ -4805,7 +4304,6 @@ object VectorSearch {
     * it is a wrong plan at any cost, so the LSH index is routed to by
     * CONTRACT (near-dup/threshold keys: vs_lsh_*, stream_search_lsh),
     * never by the top-K cost rule. */
-  final val PlanIvfCells = 8
   def vsPlannedRoute: Q = (spark, dir) => {
     ensurePlannerStats(spark, dir)
     vsPlannedRouteWith(spark, dir,
@@ -4820,18 +4318,18 @@ object VectorSearch {
       costIvf: Long, costGraph: Long): DataFrame = {
     ensurePlannerStats(spark, dir)
     val est = plannerStatsEstimates(spark, dir)
-    val (_, qs, preds) = plannerArtifacts(spark, dir)
+    val qs = plannerQueries(int8GridShared(spark, dir))
     val wQ = Window.partitionBy("pred", "q_id").orderBy(col("d2"), col("c_id"))
-    val arms = preds.map { case (tag, fcorp, nPass, exact) =>
+    val arms = plannerArtifacts(spark, dir).map { case (tag, fcorp, nPass, exact) =>
       val nEst = est(tag)
       val (plan, approx) =
         if (nEst <= costIvf && nEst <= costGraph) ("brute", exact)
         else if (costIvf <= costGraph) {
-          // IVF arm machinery memoized per (session, dir): a run where
-          // no predicate routes to IVF pays only the ANALYZE-time
-          // training that persisted the occupancy histogram.
-          val (_, assigned, probes) = plannerIvfParts(spark, dir)
-          ("ivf", assigned.join(broadcast(probes), "cell")
+          // The session's one trained IVF ([[ivfTrained]]), probed by
+          // the planner's query slice.
+          val (model, assigned) = ivfTrained(spark, dir)
+          val probes = IvfIndex.probe(qs, "qq", model, IvfTrainedNprobe).select("q_id", "cell")
+          ("ivf", assigned.select("c_id", "cell").join(broadcast(probes), "cell")
             .join(fcorp.select(col("vec_id").as("c_id"), col("qd")), "c_id")
             .join(broadcast(qs), "q_id")
             .select(lit(tag).as("pred"), col("q_id"), col("c_id"),
@@ -4857,12 +4355,11 @@ object VectorSearch {
 
   /** Full SQL replay of [[vsPlannedRoute]]: shared stats CTEs + the
     * three-way cost rule (`costs`/`plan$i`), the graph build PREFIXED
-    * `z` (the Lloyd CTEs need the unprefixed d/a/s/u/c names), the
+    * `z` (the trainer CTEs use the unprefixed a/s/u/c names), the
     * shared unrolled integer-Lloyd trainer on the same int8 grid, the
     * per-query nprobe probe, and per predicate all three arms with the
     * grade's hit CASE switching on the replayed plan choice. */
   val vsPlannedRouteSql: String = {
-    def round_(i: Int, cin: String, cout: String) = ivfLloydRoundSql(i, cin, cout, "qvv")
     val perPred = plannerPredsSqlDefs.zipWithIndex.map { case ((tag, cond), ix) =>
       val i = ix + 1
       s"""
@@ -4929,30 +4426,9 @@ object VectorSearch {
       JOIN documents d ON e2.vec_id = d.doc_id)$plannerStatsCtesSql,
     ${NngSql.buildCtes("quant", "z")},
     ${NngSql.hopCtes("f", "zgs", "qs", "quant", "quant")},
-    qvv AS (SELECT vec_id, qd AS q FROM quant),
-    c0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, q AS c
-      FROM qvv ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id
-      LIMIT $PlanIvfCells),
-    ${round_(1, "c0", "c1")},
-    ${round_(2, "c1", "c2")},
-    dfq AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.q) + 1),
-          d -> (t.q[d] - c.c[d]) * (t.q[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qvv t, c2 c),
-    af AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM dfq)
-      WHERE rn = 1),
-    pd0 AS (SELECT q.q_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(q.qq) + 1),
-          d -> (q.qq[d] - c.c[d]) * (q.qq[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM qs q, c2 c),
-    probe0 AS (SELECT q_id, cid AS cell FROM (
-        SELECT q_id, cid,
-          row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn FROM pd0)
-      WHERE rn <= $IvfTrainedNprobe),
+    ${ivfTrainSql("quant")},
+    ${ivfAssignSql("af", "quant")},
+    ${ivfProbeSql("probe0", "qs", IvfTrainedNprobe)},
     costs AS (SELECT (SELECT CAST(SUM(nb) AS BIGINT) FROM (
           SELECT COUNT(*) AS nb FROM af GROUP BY cell
           ORDER BY nb DESC LIMIT $IvfTrainedNprobe)) AS c_ivf,
@@ -5017,7 +4493,7 @@ object VectorSearch {
     * own index construction. */
   final val MergeMod = 3L
   def vsNngMerge: Q = (spark, dir) => {
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val qs = qv.filter(col("vec_id") % 100 === 7)
       .select(col("vec_id").as("q_id"), col("qd").as("qq"))
     // Consolidation + grading search memoized per (session, dir) — the
@@ -5153,7 +4629,7 @@ object VectorSearch {
   final val FilterCoverageCap: Long =
     (NnGraph.Entries + NnGraph.EscHops.toLong * NnGraph.EscBeam * NnGraph.K) / 2L
   def vsNngFiltered: Q = (spark, dir) => {
-    val qv = nngQv(spark, dir)
+    val qv = int8GridShared(spark, dir)
     val (refined, init) = NnGraph.buildShared(qv, dir, "full")
     val pass = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       .filter(col("label") === 7)
@@ -5291,7 +4767,7 @@ object VectorSearch {
       val maxAbs = picked.iterator.flatMap(_._2.iterator).map(math.abs).max
       require(maxAbs > 0.0, s"w2v vocabulary at $dir is all-zero (maxAbs=$maxAbs)")
       picked.map { case (w, v) =>
-        (w, v.map(x => math.round(x * 127.0 / maxAbs)))
+        (w, v.map(x => IvfIndex.quantizeValue(x, maxAbs)))
       }.sortBy(_._1).toSeq
     })
 

@@ -1002,11 +1002,9 @@ object Streaming {
 
   /** An incoming query's `embedding` quantized onto the corpus int8 grid
     * (the maxabs scale is a bounded driver scalar computed batch-side
-    * before the stream starts — same posture as [[ingestCentroids]];
-    * same formula as [[graft.ops.VectorSearch.int8Grid]]). */
+    * before the stream starts — same posture as [[ingestCentroids]]). */
   private def quantized(ma: Double): Column =
-    transform(col("embedding").cast("array<double>"),
-      x => round(x * 127.0 / lit(ma), 0).cast("long")).as("qq")
+    graft.ops.IvfIndex.quantize(col("embedding").cast("array<double>"), lit(ma)).as("qq")
 
   /** The bounded [[graft.functions.TopKMinPairs]] cut of scored
     * (q_id, c_id, d2) rows to (q_id, top). */
@@ -1073,8 +1071,9 @@ object Streaming {
   // ── Streaming search served FROM THE INDEX (r12, VERDICT r11 #5) ────
   // stream_search scores every query against the FULL corpus — at
   // 100 TB the static side must be the ANN index. This leg is that
-  // composition: the integer IVF codebook (the vs_ivf_trained trainer —
-  // k=8, 2 Lloyd rounds, hash-coin seeds) is trained batch-side BEFORE
+  // composition: the integer IVF codebook (the session's one trained IVF,
+  // [[graft.ops.VectorSearch.ivfTrained]] — k=8, 2 Lloyd rounds,
+  // hash-coin seeds) is trained batch-side BEFORE
   // the stream starts, its 8×64 longs broadcast into every micro-batch
   // as literals (the ingestCentroids posture); the cell-ASSIGNMENT
   // table — the stored index artifact — is staged once; each query
@@ -1090,31 +1089,6 @@ object Streaming {
     * twin at sf0.01/sf0.1 (see EventsStreamingSpec), with margin. */
   final val SearchIvfRecallFloorPpm = 600000L
 
-  /** The trained model + staged assignment table both legs share.
-    * Memoized per (session, dir) — r19: both serve legs re-trained the
-    * identical serving index per evaluation; the grid comes from the
-    * shared staged memo ([[graft.ops.VectorSearch.int8GridShared]])
-    * instead of a private re-quantize + re-stage. Deterministic, so
-    * content-identical to a fresh build (hashes unchanged). */
-  private def searchIvfIndex(spark: SparkSession, dir: String)
-      : (graft.ops.IvfIndex.IntModel, DataFrame) =
-    graft.util.Staged.get(spark, "stream.searchIvf", dir) {
-      val qv = graft.ops.VectorSearch.int8GridShared(spark, dir)
-      val model = graft.ops.IvfIndex.fitInt(qv, "vec_id", "qd", k = 8, iters = 2)
-      val assigned = graft.util.Persist.stage(
-        qv.select(col("vec_id").as("c_id"),
-          graft.ops.IvfIndex.intCellOf(col("qd"), model).as("cell"), col("qd")),
-        eager = false)
-      (model, assigned)
-    }
-  private def probeCells(model: graft.ops.IvfIndex.IntModel): Column = {
-    val structs = model.centroids.map { case (cid, cv) =>
-      struct(graft.ops.IvfIndex.intD2(col("qq"), cv).as("d2"),
-        lit(cid.toLong).as("cid"))
-    }
-    slice(array_sort(array(structs: _*)), 1, SearchNprobe)
-  }
-
   /** The IVF cut every IVF serve shares — the unpruned serves, their
     * batch twins and the pruned serve: probed (q_id, qq, cell) rows
     * hash-join the (cell, c_id, qd) assignment on cell, exact integer
@@ -1129,9 +1103,7 @@ object Streaming {
   private def ivfProbeCut(qs: DataFrame, index: (graft.ops.IvfIndex.IntModel, DataFrame))
       : DataFrame = {
     val (model, assigned) = index
-    ivfCut(
-      qs.select(col("q_id"), col("qq"), explode(probeCells(model)).as("p"))
-        .select(col("q_id"), col("qq"), col("p.cid").as("cell")),
+    ivfCut(graft.ops.IvfIndex.probe(qs.select("q_id", "qq"), "qq", model, SearchNprobe),
       assigned)
   }
 
@@ -1139,7 +1111,7 @@ object Streaming {
   private[graft] def trainedIvfServe(spark: SparkSession, dir: String)
       : DataFrame => DataFrame = {
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, dir)
-    val index = searchIvfIndex(spark, dir)
+    val index = graft.ops.VectorSearch.ivfTrained(spark, dir)
     b => ivfProbeCut(b.select(col("q_id"), quantized(ma)), index)
   }
 
@@ -1226,7 +1198,7 @@ object Streaming {
     * oracle replays the Lloyd trainer the way vs_ivf_trained's does,
     * then the probe join). */
   def vsSearchIvfBatch(spark: SparkSession, dir: String): DataFrame =
-    searchServeBatch(spark, dir, searchIvfIndex(spark, dir))
+    searchServeBatch(spark, dir, graft.ops.VectorSearch.ivfTrained(spark, dir))
 
   /** The two IVF batch twins: the grid's query slice through
     * [[ivfProbeCut]] against `index` (whose assignment carries `qd` —
@@ -1257,23 +1229,11 @@ object Streaming {
     * store round-trip is value-preserving — the vs_*_load contract). */
   private[graft] def storedIvfIndex(spark: SparkSession, dir: String)
       : (graft.ops.IvfIndex.IntModel, DataFrame) = {
-    val model = storedIvfModel(spark, dir)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, dir)
     val assigned = graft.util.Persist.stage(
       spark.table(graft.ops.VectorSearch.storedTable("graft_ivf_assign", dir)),
       eager = false)
     (model, assigned)
-  }
-
-  /** The reloaded centroid model alone — what the PRUNED serve loads
-    * (it reads the assignment table per batch through a pruned
-    * FileScan, never a staged full copy). */
-  private[graft] def storedIvfModel(spark: SparkSession, dir: String)
-      : graft.ops.IvfIndex.IntModel = {
-    graft.ops.VectorSearch.ensureIvfStored(spark, dir)
-    graft.ops.IvfIndex.IntModel(
-      spark.table(graft.ops.VectorSearch.storedTable("graft_ivf_centroids", dir))
-        .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toIndexedSeq))
-        .sortBy(_._1).toIndexedSeq)
   }
 
   /** Per-micro-batch serve from the RELOADED index. */
@@ -1455,13 +1415,14 @@ object Streaming {
       spark.table(graft.ops.VectorSearch.storedTable("graft_ivf_assign", dir))
     val qrows = batch
       .select(col("q_id"), quantized(ma))
-      .select(col("q_id"), col("qq"), probeCells(model).as("cells"))
+      .select(col("q_id"), col("qq"),
+        graft.ops.IvfIndex.probeCells(col("qq"), model, SearchNprobe).as("cells"))
       .collect()
     if (qrows.isEmpty) return servedEmpty(spark, distinctCut = false)
     val probeLocal = qrows.toSeq.flatMap { qr =>
       val qq = qr.getSeq[Long](1)
       qr.getSeq[org.apache.spark.sql.Row](2)
-        .map(c => (qr.getLong(0), qq, c.getLong(1).toInt))
+        .map(c => (qr.getLong(0), qq, c.getInt(1)))
     }
     val cells = probeLocal.map(_._3).distinct
     ivfCut(broadcast(probeLocal.toDF("q_id", "qq", "cell")),
@@ -1557,7 +1518,7 @@ object Streaming {
   def vsSearchStoredPrunedStream(spark: SparkSession, dir: String,
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, dir)
-    val model = storedIvfModel(spark, dir)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, dir)
     serveFiles(spark, dir, ivfPrunedChain(spark, dir, ma, model), sink)
   }
 
@@ -1592,7 +1553,7 @@ object Streaming {
   def serveIvfRatePruned(spark: SparkSession, dir: String,
       nBatches: Int, batchSize: Int): Seq[Double] = {
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, dir)
-    val model = storedIvfModel(spark, dir)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, dir)
     serveRate(spark, dir, nBatches, batchSize)(ivfPrunedChain(spark, dir, ma, model))
   }
 
@@ -1630,58 +1591,22 @@ object Streaming {
       SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY nd, c_id) AS rn
       FROM sc WHERE nd IS NOT NULL) WHERE rn <= $SearchTopK ORDER BY q_id, rank"""
 
-  /** Full SQL replay: quantize → hash-coin-seeded integer Lloyd (2
-    * unrolled rounds, the vs_ivf_trained technique) → cell assignment →
-    * per-query nprobe cell pick → cell join → exact rescore → top-k. */
-  val vsSearchIvfSql: String = {
-    def round_(i: Int, cin: String, cout: String) = s"""
-    svd$i AS (SELECT t.vec_id, t.qd, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.qd) + 1),
-          d -> (t.qd[d] - c.c[d]) * (t.qd[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM quant t, $cin c),
-    sva$i AS (SELECT vec_id, qd, cid FROM (
-        SELECT vec_id, qd, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM svd$i)
-      WHERE rn = 1),
-    svs$i AS (SELECT cid, dd.d AS dim, CAST(SUM(qd[dd.d]) AS BIGINT) AS s, COUNT(*) AS n
-      FROM sva$i, (SELECT unnest(range(1, 65)) AS d) dd GROUP BY cid, dd.d),
-    svu$i AS (SELECT cid,
-        list((2 * (s + 127 * n) + n) // (2 * n) - 127 ORDER BY dim) AS c
-      FROM svs$i GROUP BY cid),
-    $cout AS (SELECT $cin.cid, COALESCE(svu$i.c, $cin.c) AS c
-      FROM $cin LEFT JOIN svu$i ON $cin.cid = svu$i.cid)"""
-    graft.ops.VectorSearch.int8GridCtes + s""",
-    svc0 AS (SELECT CAST(row_number()
-          OVER (ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id) - 1
-        AS INT) AS cid, qd AS c
-      FROM quant ORDER BY ${graft.util.Det.hashCoinSql("vec_id")}, vec_id LIMIT 8),
-    ${round_(1, "svc0", "svc1")},
-    ${round_(2, "svc1", "svc2")},
-    svdf AS (SELECT t.vec_id, c.cid,
-        CAST(list_sum(list_transform(range(1, len(t.qd) + 1),
-          d -> (t.qd[d] - c.c[d]) * (t.qd[d] - c.c[d]))) AS BIGINT) AS d2
-      FROM quant t, svc2 c),
-    svaf AS (SELECT vec_id AS c_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM svdf)
-      WHERE rn = 1),
+  /** Full SQL replay: the trained-IVF CTEs (quantize → hash-coin-seeded
+    * integer Lloyd → cell assignment) → per-query nprobe cell pick → cell
+    * join → exact rescore → top-k. */
+  val vsSearchIvfSql: String =
+    graft.ops.VectorSearch.ivfTrainedCtes + s""",
     svqs AS (SELECT vec_id AS q_id, qd AS qq FROM quant WHERE vec_id % 100 = 0),
-    svpr AS (SELECT q_id, cell FROM (
-        SELECT q.q_id, c.cid AS cell,
-          row_number() OVER (PARTITION BY q.q_id ORDER BY
-            CAST(list_sum(list_transform(range(1, len(q.qq) + 1),
-              d -> (q.qq[d] - c.c[d]) * (q.qq[d] - c.c[d]))) AS BIGINT), c.cid) AS rn
-        FROM svqs q, svc2 c) WHERE rn <= $SearchNprobe),
+    ${graft.ops.VectorSearch.ivfProbeSql("svpr", "svqs", SearchNprobe)},
     svsc AS (SELECT q.q_id, a.c_id,
         CAST(list_sum(list_transform(range(1, len(c.qd) + 1),
           i -> (c.qd[i] - q.qq[i]) * (c.qd[i] - q.qq[i]))) AS BIGINT) AS d2
       FROM svpr p JOIN svqs q ON q.q_id = p.q_id
-      JOIN svaf a ON a.cell = p.cell
+      JOIN af a ON a.cell = p.cell
       JOIN quant c ON c.vec_id = a.c_id)
     SELECT q_id, CAST(rn AS BIGINT) AS rank, c_id, d2 FROM (
       SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rn
       FROM svsc) WHERE rn <= $SearchTopK ORDER BY q_id, rank"""
-  }
 
   // ── Streaming decontamination gate (always-on ingest filter) ───────
   // text_fuzzy_decontaminate is the BATCH sweep; the pipeline's other

@@ -48,7 +48,7 @@ class PlannedRouteSpec extends SparkSpec {
     val occRouted = byPred(SparkEntry.queries("vs_planned_route")(spark, dir).collect())
     val occCost = VectorSearch.plannerStatsIvfCost(spark, dir)
     val uniformCost = VectorSearch.plannerStatsTotalN(spark, dir) *
-      VectorSearch.IvfTrainedNprobe / VectorSearch.PlanIvfCells
+      VectorSearch.IvfTrainedNprobe / graft.ops.IvfIndex.Cells
     val uniRouted = byPred(VectorSearch.vsPlannedRouteWith(spark, dir,
       uniformCost, VectorSearch.PlanBruteCutoff).collect())
     info(s"uniform cost=$uniformCost, occupancy cost=$occCost, " +

@@ -83,6 +83,21 @@ class StagedSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("one session trains the full-grid IVF once for every IVF consumer") {
+    // Per-JVM totals: read the change across one fresh session.
+    val legacy = Seq("vs.ivfModel:full", "stream.searchIvf", "vs.plannerIvf")
+    val names = "vs.ivfTrained" +: legacy
+    val before = names.map(n => n -> stat(n)).toMap
+    val fresh = spark.newSession()
+    for (k <- Seq("vs_ivf_trained", "vs_ivf_delete", "stream_search_ivf", "vs_planned_route"))
+      SparkEntry.queries(k)(fresh, sf).collect()
+    val delta = names.map { n =>
+      n -> (stat(n)._1 - before(n)._1, stat(n)._2 - before(n)._2) }.toMap
+    assert(delta("vs.ivfTrained")._1 == 1, s"trained-IVF builds: $delta")
+    assert(delta("vs.ivfTrained")._2 >= 2, s"trained-IVF hits: $delta")
+    assert(legacy.map(delta(_)._1).sum == 0, s"a consumer trained its own IVF: $delta")
+  }
+
   test("evictAll then a blanket unpersist: memoized keys rebuild, same answers") {
     // The failure this guards ("checkpoint block not found"): a memo
     // that outlives the unpersist of its localCheckpoint blocks serves

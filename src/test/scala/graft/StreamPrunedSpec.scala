@@ -32,7 +32,7 @@ class StreamPrunedSpec extends SparkSpec {
     val twin = SparkEntry.queries("stream_search_stored")(spark, sf)
       .collect().map(key).sorted.toIndexedSeq
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, sf)
-    val model = Streaming.storedIvfModel(spark, sf)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, sf)
     val pruned = exploded(Streaming.ivfPrunedChain(spark, sf, ma, model)(queriesIvf))
     assert(pruned.nonEmpty && pruned == twin,
       "pruned IVF serve diverged from the stored batch twin")
@@ -40,7 +40,7 @@ class StreamPrunedSpec extends SparkSpec {
 
   test("pruned IVF serve reads only the probed cells' bucket files") {
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, sf)
-    val model = Streaming.storedIvfModel(spark, sf)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, sf)
     // one query probes nprobe=3 of 8 cells — the scan must prune to
     // at most the probed cells' buckets, never the full artifact
     val out = Streaming.ivfPrunedChain(spark, sf, ma, model)(queriesIvf.limit(1))
@@ -113,7 +113,7 @@ class StreamPrunedSpec extends SparkSpec {
 
   test("empty micro-batch: schema-only result, no probe jobs") {
     val ma = graft.ops.VectorSearch.gridMaxAbs(spark, sf)
-    val model = Streaming.storedIvfModel(spark, sf)
+    val model = graft.ops.VectorSearch.storedIvfModel(spark, sf)
     val e = Streaming.ivfPrunedChain(spark, sf, ma, model)(queriesIvf.limit(0))
     assert(e.columns.toSeq == Seq("q_id", "top") && e.count() == 0)
     val (flat, r, b) = Streaming.lshServeGeometry(spark, sf)
